@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Per-round benchmark main: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Failures are recorded
   * per-query in an "errors" object and make the process exit non-zero
@@ -9,15 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Per-query warmup run immediately before the timed run, same SF:
     // the timed number measures steady-state execution, not one-time
@@ -25,9 +17,11 @@ object Bench {
     // widest expression trees — a fixed cost that is noise at cluster
     // scale but dominated sf0.1 wall times). Empirically the warmup
     // must use the SAME sf dir (a smaller-SF run does not prime the
-    // compile caches for the target plan) and sit adjacent to the
-    // measurement (the codegen cache is bounded; a whole-suite warmup
-    // pass evicts its own entries).
+    // compile caches for the target plan). It sits adjacent to the
+    // measurement so that what it primes is this query's own plan:
+    // the generated-code cache GraftSession sizes holds one entry's
+    // classes with room to spare, but is not sized for the whole
+    // pack's, and the JIT's hot code is likewise the recent plans'.
     var errors = List.empty[(String, String)]
     // Execute the query's OWN physical plan and drain it distributed
     // (no driver collect). NOT `df.count()`: that re-plans with an

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round evidence dumper: writes
   * `plans/<tag>/<entry>_<suffix>.txt` with the `explain("formatted")`
   * output of each named SparkEntry query at the given SF dir — the
@@ -13,27 +11,20 @@ import org.apache.spark.sql.SparkSession
   * Env: SPARK_GRAFT_ONLY=<entry[,entry]> (required),
   * SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_PLAN_TAG (default
   * "r15"), SPARK_GRAFT_PLAN_SUFFIX ("before" | "after", required).
-  * Session conf mirrors graft.Bench so the dumped plan is the plan the
-  * bench executes.
+  * The session is built as graft.Bench builds it, so the dumped plan
+  * is the plan the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "r15")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX",
       sys.error("PlanDump: set SPARK_GRAFT_PLAN_SUFFIX=before|after"))
     val names = sys.env.getOrElse("SPARK_GRAFT_ONLY",
       sys.error("PlanDump: set SPARK_GRAFT_ONLY=<entry[,entry]>"))
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // validate up front (ADVICE r15): a typo'd entry name used to
     // throw a bare NoSuchElementException mid-list with the session

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates docs/PLANS.md: the formatted physical plan of every
   * headline query at sf0.01, for scale review (PushedFilters /
   * ReadSchema / join strategies / WholeStageCodegen spans).
@@ -12,14 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.create("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val headline = Seq(
       "q1_agg", "q3_topk", "q5_multijoin", "time_range_prune",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.concurrent.TrieMap
 
@@ -17,17 +16,10 @@ import scala.collection.concurrent.TrieMap
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val name = sys.env.getOrElse("SPARK_GRAFT_ONLY",
       sys.error("ProbeJobs: set SPARK_GRAFT_ONLY=<entry>"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     case class J(start: Long, var tasks: Int = 0, var runMs: Long = 0,

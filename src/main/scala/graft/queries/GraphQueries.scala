@@ -26,9 +26,9 @@ object GraphQueries extends QueryPack {
     * giant component, so the WCC/BFS entries run on a sparse slice
     * with real component structure while PageRank/similarity use the
     * full relation. */
-  private def supplyEdges(s: org.apache.spark.sql.SparkSession, dir: String,
-                          quantityCap: Option[Double] = None,
-                          partStratum: Option[Int] = None) = {
+  private[graft] def supplyEdges(s: org.apache.spark.sql.SparkSession, dir: String,
+                                 quantityCap: Option[Double] = None,
+                                 partStratum: Option[Int] = None) = {
     var li = Tables.load(s, dir, "lineitem")
     quantityCap.foreach(q => li = li.filter(col("l_quantity") <= q))
     partStratum.foreach(m => li = li.filter(col("l_partkey") % m === 0))
@@ -48,9 +48,10 @@ object GraphQueries extends QueryPack {
     * degree read +2). With the loop filtered the symmetric union is
     * duplicate-free: row-identical to GraphOps.undirected on these
     * inputs (the oracle replays its own dedup'd form and
-    * hash-compares at every SF); NOT valid for arbitrary edge lists —
-    * operators keep the dedup'ing GraphOps.undirected. */
-  private def symSupply(e: org.apache.spark.sql.DataFrame) = {
+    * hash-compares at every SF, and SymSupplySpec checks the premise
+    * row for row); NOT valid for arbitrary edge lists — operators
+    * keep the dedup'ing GraphOps.undirected. */
+  private[graft] def symSupply(e: org.apache.spark.sql.DataFrame) = {
     val base = e.select(col("a"), col("b")).filter(col("a") =!= col("b"))
     base.unionAll(base.select(col("b").as("a"), col("a").as("b")))
   }

@@ -10,6 +10,12 @@ class ExtensionsSpec extends SparkSpec {
     assert(c("spark.sql.adaptive.skewJoin.enabled") == "true")
     assert(c("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(c("spark.sql.session.timeZone") == "UTC")
+    // one graph pass's generated classes must fit, or every pass
+    // recompiles them all (see RecompileSpec)
+    assert(c("spark.sql.codegen.cache.maxEntries").toInt >= 1000)
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      c("spark.sql.codegen.cache.maxEntries"),
+      "the shared test session is built through GraftSession.create")
   }
 
   test("dot_product is callable from SQL after register(spark)") {

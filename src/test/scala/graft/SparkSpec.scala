@@ -12,16 +12,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
+    // a spark.* system property is a SparkConf default that create()
+    // leaves alone
+    System.setProperty("spark.sql.warehouse.dir",
+      s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
+    val s = GraftSession.create("local[4]", 4, "graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }
