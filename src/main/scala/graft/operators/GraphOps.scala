@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.util.DynamicVariable
+
 /** Graph algorithms over an edge-list DataFrame — the Neo4j GDS
   * workload class the reference's source system serves (the reference
   * exports a Neo4j graph into ClickHouse; its users run degree / WCC /
@@ -34,11 +37,12 @@ import org.apache.spark.storage.StorageLevel
   * CALLER-OWNED, the sketch-operator contract (docs/SCALE.md
   * "caching stance"): the operator itself cannot unpersist them
   * without forcing execution, since the returned lazy plan still
-  * references them. Every pin is registered, so callers have three
-  * reclaim shapes (r10, VERDICT r9 #7): [[materialized]] for
-  * one-shot results (checkpoint + scoped release), [[releasePinned]]
-  * after composing several operators, or the blunt
-  * `spark.catalog.clearCache()`. LOOP-SCOPED
+  * references them. Pins are SCOPED, not registered globally:
+  * [[materialized]] evaluates an operator build inside a pin scope,
+  * checkpoints the result and releases exactly the pins that build
+  * made; a pin made outside any scope is a plain persist the caller
+  * reclaims (`unpersist`, or `spark.catalog.clearCache()` once it has
+  * materialized). A build on another thread has its own scope. LOOP-SCOPED
   * STATE (each round's ranks/labels/frontier, and the HITS vectors
   * whose lazy tree otherwise doubles per half-step) is
   * `localCheckpoint`ed — lineage truncation is what iterative plans
@@ -48,53 +52,39 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphOps {
 
-  /** Every loop-invariant relation this operator family persists
-    * (pinned via [[pin]]), so a one-shot caller can reclaim exactly
-    * these without touching unrelated session cache. Synchronized
-    * list — registration is cheap; release is explicit. */
-  private val pinnedRelations =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
+  /** The pins of the [[materialized]] build running on this thread
+    * (None outside any build). */
+  private val pinScope =
+    new DynamicVariable[Option[ConcurrentLinkedQueue[DataFrame]]](None)
 
+  /** Persist a loop-invariant relation. Inside a [[materialized]]
+    * build the scope owns the entry — unless the plan was already
+    * cached, in which case the entry stays with whoever cached it. */
   private def pin(df: DataFrame): DataFrame = {
+    val fresh = df.storageLevel == StorageLevel.NONE
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    pinnedRelations.add(p)
+    if (fresh) pinScope.value.foreach(_.add(p))
     p
   }
 
-  /** Unpersist every relation this object has pinned since the last
-    * release (non-blocking). Exactly the caller-owned-cleanup step of
-    * the cache contract in the header — scoped to GraphOps' own pins,
-    * unlike `spark.catalog.clearCache()` which drops unrelated
-    * session cache too. NOT safe while another thread is inside a
-    * GraphOps iterative build (its loop-invariants would vanish
-    * mid-loop and silently recompute); single-tenant callers only.
-    *
-    * NOTE for `spark.catalog.clearCache()` users: clearCache drops the
-    * cached data but NOT this registry — the stale DataFrame
-    * references (and their logical plans) stay on the driver until
-    * releasePinned() runs. A long-lived session reclaiming via
-    * clearCache must ALSO call releasePinned() (idempotent —
-    * unpersisting an already-evicted relation is a no-op) or the
-    * registry grows without bound. */
-  def releasePinned(): Unit = pinnedRelations.synchronized {
-    pinnedRelations.forEach(_.unpersist(false))
-    pinnedRelations.clear()
+  /** One-shot driver discipline (VERDICT r9 #7): evaluate the operator
+    * build `df` inside a pin scope, MATERIALIZE its result (eager
+    * `localCheckpoint` — executes the plan once and truncates lineage,
+    * so the returned frame no longer references the pinned
+    * invariants), hand the checkpointed result to `use`, then release
+    * exactly the pins that build made (non-blocking unpersist). A full
+    * pass over one-shot entries therefore ends with zero residual
+    * GraphOps cache, and cache the caller owns — including operators
+    * built outside any scope — is untouched. Library callers
+    * composing several graph operators over the same edge relation
+    * build them OUTSIDE `materialized` — the plan-keyed cache reuse
+    * across calls is the point of the persist contract — and reclaim
+    * with `spark.catalog.clearCache()` once they materialize. */
+  def materialized[T](df: => DataFrame)(use: DataFrame => T): T = {
+    val pins = new ConcurrentLinkedQueue[DataFrame]()
+    try use(pinScope.withValue(Some(pins))(df.localCheckpoint()))
+    finally pins.forEach(_.unpersist(false))
   }
-
-  /** One-shot driver discipline (VERDICT r9 #7): MATERIALIZE the
-    * operator result (eager `localCheckpoint` — executes the plan
-    * once and truncates lineage, so the returned frame no longer
-    * references the pinned invariants), release every relation this
-    * object pinned, then hand the checkpointed result to `use`. A
-    * full pass over one-shot entries therefore ends with zero
-    * residual GraphOps cache. Library callers composing several
-    * graph operators over the same edge relation should NOT use
-    * this — the plan-keyed cache reuse across calls is the point of
-    * the persist contract — and instead call [[releasePinned]] (or
-    * `spark.catalog.clearCache()`) once they materialize. */
-  def materialized[T](df: DataFrame)(use: DataFrame => T): T =
-    try use(df.localCheckpoint())
-    finally releasePinned()
 
   /** Symmetrize a directed edge list (cols `a`, `b`) into the
     * undirected adjacency relation, self-loops dropped, duplicates
@@ -226,9 +216,9 @@ object GraphOps {
     * surviving set shrinks monotonically, so rounds cost less as they
     * go and the loop converges in peel-depth rounds (≤ 4 on every
     * scale point measured — hub-dominated graphs peel shallowly).
-    * localCheckpoint per round (the iterative-lineage discipline);
-    * one scalar count per round drives convergence; LOUD error past
-    * `maxIters` — a silently-unpeeled result would overstate the core.
+    * One [[Fixpoint]] round each: checkpointed, its surviving-node
+    * count observed in the same job; THROWS past `maxIters` — a
+    * silently-unpeeled result would overstate the core.
     *
     * Output: (node, core_degree) — members with their degree INSIDE
     * the core (the stronger invariant: every core_degree ≥ k).
@@ -236,31 +226,32 @@ object GraphOps {
   def kCore(edges: DataFrame, k: Int, maxIters: Int = 30): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     val und = undirected(edges).transform(pin)
-    var s = und.select(col("a").as("n")).distinct().localCheckpoint()
-    var prev = -1L
-    var n = s.count()
-    var iter = 0
-    while (n != prev && iter < maxIters) {
-      prev = n
-      s = und
+    val (s0, n0) = Fixpoint.checkpoint(
+      und.select(col("a").as("n")).distinct(), count(lit(1)))
+    val s = Fixpoint.untilStable("kCore", maxIters, s0, n0)(s =>
+      Fixpoint.checkpoint(und
         .join(s.select(col("n").as("a")), "a")
         .join(s.select(col("n").as("b")), "b")
         .groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select("n")
-        .localCheckpoint()
-      n = s.count()
-      iter += 1
-    }
-    if (n != prev)
-      org.slf4j.LoggerFactory.getLogger(getClass).error(
-        s"kCore stopped at maxIters=$maxIters before the peel fixpoint — " +
-          "the returned set is a SUPERSET of the true k-core. Raise " +
-          "maxIters (rounds needed = peel depth).")
+        .filter(col("d") >= k).select("n"), count(lit(1))))
     // final in-core degrees — every one ≥ k by construction
     und.join(s.select(col("n").as("a")), "a")
       .join(s.select(col("n").as("b")), "b")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_degree"))
   }
+
+  /** [[coreness]] runs the tight-delta loop only past this many
+    * undirected edges (overridable via `graft.coreness.deltaEdges`
+    * conf or `GRAFT_CORENESS_DELTA_EDGES` env — the walk-broadcast
+    * budget pattern): below it the delta's fixed per-round overhead
+    * (two extra |E| cache scans + 3 extra joins' job latency) costs
+    * more than the restricted recompute saves (measured: sf0.1
+    * |E|=1.2M full 4.8–5.4 s vs delta 5.6–6.0 s; 100× |E|=117M full
+    * 65–75 s vs delta 43.5–46 s — quiet box, identical output). */
+  private def corenessDeltaEdges(df: DataFrame): Long =
+    df.sparkSession.conf.getOption("graft.coreness.deltaEdges")
+      .orElse(sys.env.get("GRAFT_CORENESS_DELTA_EDGES"))
+      .map(_.toLong).getOrElse(10000000L)
 
   /** B31 (r14): FULL core decomposition — coreness(v) for EVERY node
     * (Neo4j GDS `kcore`'s coreness output; [[kCore]] answers the
@@ -283,7 +274,8 @@ object GraphOps {
     * vector each round with sum-convergence (monotone non-increasing
     * per node ⇒ the integer sum strictly decreases until the
     * fixpoint — the dedupClusters min-label argument), i.e. exactly
-    * 2 jobs per round; PAST it, rounds after the first recompute only
+    * 1 job per round (the sum is observed by the checkpoint job,
+    * [[Fixpoint]]); PAST it, rounds after the first recompute only
     * the nodes a with a changed neighbor CROSSING BELOW c(a) — a much
     * tighter frontier than the r15 N(frontier) delta, which re-ran
     * nearly the whole hub graph every round. Measured (quiet box,
@@ -296,18 +288,19 @@ object GraphOps {
     * size(filter(...)) over the sorted value array (measured equal
     * to a count-only agg — the join, not the collect, is the round's
     * cost). Rounds needed ≈ graph-dependent but small (≤ 6 observed
-    * at every scale point; the peel-depth class); LOUD past maxIters
-    * like kCore.
+    * at every scale point; the peel-depth class); THROWS past
+    * maxIters like kCore.
     *
     * Output: (node, coreness).
     *
-    * `assertConvergedWithin`: the cross-engine oracle replays a FIXED
-    * round count; past the fixpoint each round is identity, so the
-    * replay matches iff the fixpoint arrived within that count. When
-    * set, the operator THROWS if convergence took more rounds — a
-    * loud, named failure at verify time instead of a silent hash
-    * mismatch (ADVICE r14). Observed convergence is ≤ 6 rounds at
-    * every scale point (sf0.001 → 100×); the oracle replays 10.
+    * Oracle replays: the cross-engine oracle replays a FIXED round
+    * count R; past the fixpoint each round is identity, so the replay
+    * matches iff the fixpoint arrived within R rounds. A caller pins
+    * that premise with `maxIters = R + 1` (the extra round is the
+    * identity round that detects the fixpoint): a slower convergence
+    * THROWS, a loud, named failure at verify time instead of a silent
+    * hash mismatch (ADVICE r14). Observed convergence is ≤ 6 rounds
+    * at every scale point (sf0.001 → 100×); the oracle replays 10.
     *
     * Hub-degree bound (VERDICT r14 watch item): the per-round
     * `collect_list` of neighbor values is sized by TRUE degree — the
@@ -319,21 +312,7 @@ object GraphOps {
     * count) — documented here as the named escape hatch rather than
     * silently capping degrees, because a cap CHANGES coreness
     * semantics where B9's sampled-neighborhood cap does not. */
-  /** [[coreness]] runs the tight-delta loop only past this many
-    * undirected edges (overridable via `graft.coreness.deltaEdges`
-    * conf or `GRAFT_CORENESS_DELTA_EDGES` env — the walk-broadcast
-    * budget pattern): below it the delta's fixed per-round overhead
-    * (two extra |E| cache scans + 3 extra joins' job latency) costs
-    * more than the restricted recompute saves (measured: sf0.1
-    * |E|=1.2M full 4.8–5.4 s vs delta 5.6–6.0 s; 100× |E|=117M full
-    * 65–75 s vs delta 43.5–46 s — quiet box, identical output). */
-  private def corenessDeltaEdges(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.coreness.deltaEdges")
-      .orElse(sys.env.get("GRAFT_CORENESS_DELTA_EDGES"))
-      .map(_.toLong).getOrElse(10000000L)
-
-  def coreness(edges: DataFrame, maxIters: Int = 64,
-               assertConvergedWithin: Option[Int] = None): DataFrame = {
+  def coreness(edges: DataFrame, maxIters: Int = 64): DataFrame = {
     // ONE pinned orientation (r16 — the r15 form pinned und AND both
     // keyed copies, three |E| caches where the loop reads one): undB,
     // pre-partitioned + pre-sorted on the per-round join key b, so
@@ -345,12 +324,10 @@ object GraphOps {
     val undB = undirected(edges)
       .repartition(col("b")).sortWithinPartitions("b")
       .transform(pin)
-    var c = undB.groupBy(col("a").as("node"))
-      .agg(count(lit(1)).cast("long").as("c")).localCheckpoint()
     // Σ c₀ = Σ deg = 2|E| — the scale gate comes free off the
     // convergence sum (no extra count job)
-    var prevSum = c.agg(sum("c")).head().getLong(0)
-    val useDelta = prevSum / 2 > corenessDeltaEdges(edges)
+    val (c0, degSum) = Fixpoint.checkpoint(undB.groupBy(col("a").as("node"))
+      .agg(count(lit(1)).cast("long").as("c")), sum("c"))
     // H-recompute of one round over the adjacency slice `adj`
     def hRound(adj: DataFrame, cur: DataFrame): DataFrame = adj
       .join(cur.select(col("node").as("bk"), col("c").as("cb")),
@@ -363,18 +340,12 @@ object GraphOps {
         // positions (tie order within equal values is irrelevant)
         size(filter(col("cs"), (x, i) => x >= (i + 1).cast("long")))
           .cast("long").as("c"))
-    var iter = 0
-    var converged = false
-    if (!useDelta) {
-      // FULL recompute per round, 2 jobs each (one checkpointed
-      // H-pass + one 1-row integer sum on the checkpointed result);
+    val c = if (degSum / 2 <= corenessDeltaEdges(edges)) {
+      // FULL recompute per round, one checkpointed H-pass each;
       // per-node monotone non-increase ⇒ the sum strictly decreases
       // until the fixpoint, so sum-equality IS the identity round
-      while (!converged && iter < maxIters) {
-        c = hRound(undB, c).localCheckpoint()
-        val s = c.agg(sum("c")).head().getLong(0)
-        converged = s == prevSum; prevSum = s; iter += 1
-      }
+      Fixpoint.untilStable("coreness", maxIters, c0, degSum)(c =>
+        Fixpoint.checkpoint(hRound(undB, c), sum("c")))
     } else {
       // TIGHT DELTA (r16 — replaces the r15 N(frontier) delta, which
       // re-ran nearly the full graph every round on hub graphs):
@@ -382,17 +353,15 @@ object GraphOps {
       // c(a) — H(a) = c(a) needs count{nbr ≥ c(a)} ≥ c(a), values
       // only decrease, so the count (and with it H(a)) can only move
       // when some neighbor falls from ≥ c(a) to < c(a). The frontier
-      // carries (node, cnew, cold) to evaluate the crossing per edge.
+      // carries (node, cnew, cold) to evaluate the crossing per edge;
+      // the loop ends on the round that changes no node.
       val undA = undirected(edges)
         .repartition(col("a")).sortWithinPartitions("a")
         .transform(pin)
-      var frontier: DataFrame = null
-      var changed = 1L
-      while (changed > 0 && iter < maxIters) {
-        val adj =
-          if (frontier == null) undB
-          else {
-            val cand = undB.join(frontier.select(col("node").as("b"),
+      Fixpoint.untilZero("coreness", maxIters, (c0, Option.empty[DataFrame])) {
+        case (c, frontier) =>
+          val adj = frontier.fold(undB) { f =>
+            val cand = undB.join(f.select(col("node").as("b"),
                 col("cnew"), col("cold")), Seq("b"))
               .join(c.select(col("node").as("a"), col("c").as("ca")),
                 Seq("a"))
@@ -400,38 +369,17 @@ object GraphOps {
               .select(col("a")).distinct()
             undA.join(cand, Seq("a"), "left_semi")
           }
-        val diff = hRound(adj, c)
-          .join(c.withColumnRenamed("c", "old"), "node")
-          .filter(col("c") =!= col("old"))
-          .select(col("node"), col("c").as("cnew"), col("old").as("cold"))
-          .localCheckpoint()
-        changed = diff.count()
-        if (changed > 0) {
-          c = c.join(diff.select("node", "cnew"), Seq("node"), "left")
-            .select(col("node"), coalesce(col("cnew"), col("c")).as("c"))
-            .localCheckpoint()
-          frontier = diff
-        }
-        iter += 1
-      }
-      converged = changed == 0
-    }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).error(
-        s"coreness stopped at maxIters=$maxIters before the H-index " +
-          "fixpoint — values may EXCEED the true coreness. Raise " +
-          "maxIters.")
-    // convergedAt = the round whose OUTPUT first equals the fixpoint:
-    // the loop exits with `iter` rounds run, the last one an identity
-    // check, so the fixpoint arrived at round iter - 1
-    val convergedAt = if (converged) iter - 1 else iter
-    assertConvergedWithin.foreach { bound =>
-      if (!converged || convergedAt > bound)
-        throw new IllegalStateException(
-          s"coreness: fixpoint needed $convergedAt rounds (converged=" +
-            s"$converged) but the oracle replays only $bound — " +
-            "raise the oracle's fixed round count to keep the " +
-            "cross-engine replay sound")
+          val (diff, changed) = Fixpoint.checkpoint(hRound(adj, c)
+            .join(c.withColumnRenamed("c", "old"), "node")
+            .filter(col("c") =!= col("old"))
+            .select(col("node"), col("c").as("cnew"), col("old").as("cold")),
+            count(lit(1)))
+          val next = if (changed == 0) c
+            else c.join(diff.select("node", "cnew"), Seq("node"), "left")
+              .select(col("node"), coalesce(col("cnew"), col("c")).as("c"))
+              .localCheckpoint()
+          ((next, Some(diff)), changed)
+      }._1
     }
     c.select(col("node"), col("c").as("coreness"))
   }
@@ -1864,7 +1812,8 @@ object GraphOps {
     * MONOTONE, so extra rounds past the fixpoint are no-ops — which
     * is what lets the DuckDB oracle replay a FIXED over-provisioned
     * round count and still agree exactly (the [[kCore]] precedent).
-    * Loud past `maxIters` (the returned set is then a SUPERSET).
+    * Throws past `maxIters` (the set would be a SUPERSET), via
+    * [[Fixpoint]].
     *
     * Intended for THINNED projections (the caller strata): the plain
     * 2-path wedge join has hub fan-out C(deg, 2) without the
@@ -1888,27 +1837,13 @@ object GraphOps {
         .union(tri.select(col("v").as("a"), col("w").as("b")))
         .groupBy("a", "b").agg(count(lit(1)).as("sup"))
     }
-    var e = edges
+    val (e0, n0) = Fixpoint.checkpoint(edges
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
-    var prev = -1L
-    var n = e.count()
-    var iter = 0
-    while (n != prev && iter < maxIters) {
-      prev = n
-      e = e.join(support(e), Seq("a", "b"))
-        .filter(col("sup") >= k - 2).select("a", "b")
-        .localCheckpoint()
-      n = e.count()
-      iter += 1
-    }
-    if (n != prev)
-      org.slf4j.LoggerFactory.getLogger(getClass).error(
-        s"trussEdges stopped at maxIters=$maxIters before the peel " +
-          "fixpoint — the returned set is a SUPERSET of the true " +
-          s"$k-truss. Raise maxIters (rounds needed = peel depth).")
+      .filter(col("a") =!= col("b")).distinct(), count(lit(1)))
+    val e = Fixpoint.untilStable("trussEdges", maxIters, e0, n0)(e =>
+      Fixpoint.checkpoint(e.join(support(e), Seq("a", "b"))
+        .filter(col("sup") >= k - 2).select("a", "b"), count(lit(1))))
     e.join(support(e), Seq("a", "b")).select("a", "b", "sup")
   }
 

@@ -259,10 +259,10 @@ object PipelineOps {
     * component (the canonical "keeper"). Iterative min-label
     * propagation — each step is one equi-join + hash-agg shuffle, and
     * the iteration count is the graph diameter (near-dup clusters are
-    * shallow; the driver loop stops at the fixpoint, detected by the
-    * strictly-decreasing label sum).
-    */
-  /** @param checkpointDir when set, iteration state is written to this
+    * shallow; the [[Fixpoint]] loop stops at the fixpoint, detected by
+    * the strictly-decreasing label sum, and throws past `maxIters`).
+    *
+    * @param checkpointDir when set, iteration state is written to this
     *   RELIABLE location (HDFS/S3 on a cluster) as parquet round-trips
     *   instead of `localCheckpoint`: local checkpoints pin blocks to
     *   executors, so one executor loss mid-iteration kills the job —
@@ -325,43 +325,32 @@ object PipelineOps {
       .union(pairs.select(col(jCol).as("a"), col(iCol).as("b")))
     val edges = ck(if (checkpointDir.isEmpty)
       sym.repartition(col("b")).sortWithinPartitions("b") else sym)
-    var labels = ck(edges.groupBy("a")
+    val (labels0, sum0) = Fixpoint.checkpoint(edges.groupBy("a")
       .agg(min(least(col("a"), col("b"))).as("lbl"))
-      .select(col("a").as("n"), col("lbl")))
-    var converged = false
-    var iter = 0
-    var prevSum = labels.agg(sum("lbl")).head().getLong(0)
-    while (!converged && iter < maxIters) {
-      // each node takes the min of its own label and its neighbors' —
-      // the self-label rides the aggregation as a unioned row, so one
-      // join + one hash-agg (2 shuffles) replaces the naive
-      // join/agg/join-back (3): a third fewer exchanges per iteration,
-      // which is the whole per-iteration cost at cluster scale
-      // checkpointing truncates the per-iteration lineage (standard
-      // for iterative graph algorithms) so plan size stays constant
-      val next = ck(edges
-        .join(labels.withColumnRenamed("n", "b"), "b")
-        .select(col("a"), col("lbl"))
-        .union(labels.select(col("n").as("a"), col("lbl")))
-        .groupBy(col("a").as("n")).agg(min(col("lbl")).as("lbl")))
-      val sumNow = next.agg(sum("lbl")).head().getLong(0)
-      converged = sumNow == prevSum
-      prevSum = sumNow
-      labels = next
-      iter += 1
-    }
+      .select(col("a").as("n"), col("lbl")), sum("lbl"), ck)
     // loudness discipline (same as the LSH recall clamp): min-label
     // propagation converges in diameter iterations, and near-dup
     // graphs are shallow — but a LONG dup chain (a doc edited
     // repeatedly, each revision near-dupping the previous) can exceed
-    // maxIters, and silently returning the unconverged labels splits
-    // one cluster into several canonical "keepers"
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).error(
-        s"dedupClusters stopped at maxIters=$maxIters before reaching the " +
-          "label fixpoint — components wider than the iteration budget are " +
-          "SPLIT into multiple clusters. Raise maxIters (iterations needed " +
-          "= component diameter).")
+    // maxIters, and unconverged labels would split one cluster into
+    // several canonical "keepers", so the loop throws instead
+    val labels = Fixpoint.untilStable("dedupClusters", maxIters,
+        labels0, sum0)(labels =>
+      // each node takes the min of its own label and its neighbors' —
+      // the self-label rides the aggregation as a unioned row, so one
+      // join + one hash-agg (2 shuffles) replaces the naive
+      // join/agg/join-back (3): a third fewer exchanges per iteration,
+      // which is the whole per-iteration cost at cluster scale;
+      // checkpointing truncates the per-iteration lineage (standard
+      // for iterative graph algorithms) so plan size stays constant,
+      // and the strictly-decreasing label sum is observed by that
+      // same checkpoint job
+      Fixpoint.checkpoint(edges
+        .join(labels.withColumnRenamed("n", "b"), "b")
+        .select(col("a"), col("lbl"))
+        .union(labels.select(col("n").as("a"), col("lbl")))
+        .groupBy(col("a").as("n")).agg(min(col("lbl")).as("lbl")),
+        sum("lbl"), ck))
     labels.select(col("n").as("doc_id"), col("lbl").as("cluster_id"))
   }
 }

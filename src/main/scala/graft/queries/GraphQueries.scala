@@ -178,7 +178,7 @@ object GraphQueries extends QueryPack {
     // 75 components at sf0.01, 710 at sf0.1). Reuses the proven
     // min-label propagation loop (PipelineOps.dedupClusters, J3):
     // 2 shuffles/iteration, converges in diameter rounds (≤ 7 here),
-    // fails loud past maxIters. The oracle replays the SAME recurrence
+    // throws past maxIters (GraphOps' Fixpoint loop). The oracle replays the SAME recurrence
     // for a fixed 16 rounds — both sides sit at the fixpoint, so
     // early-stop vs fixed-count cannot diverge.
     "graph_components" -> ((s, dir) =>
@@ -208,7 +208,7 @@ object GraphQueries extends QueryPack {
     // B11: k-core decomposition (GDS coreDecomposition) — the 2-core
     // of the quantity ≤ 1 slice (non-degenerate: ~42% of nodes survive
     // at every scale point, peel depth ≤ 4). Iterative peeling to the
-    // fixpoint (GraphOps.kCore, loud past maxIters); the oracle
+    // fixpoint (GraphOps.kCore, throws past maxIters); the oracle
     // replays a FIXED 12 peel rounds — monotone shrinkage means both
     // sides sit at the fixpoint, so converge-early == fixed-count.
     // Output carries the in-core degree (every one ≥ k — the core
@@ -290,12 +290,12 @@ object GraphQueries extends QueryPack {
     // GDS coreness output next to B11's single-k membership). The
     // oracle replays 10 fixed rounds; monotone non-increase to the
     // fixpoint makes converge-early == fixed-count (the kcore
-    // argument). assertConvergedWithin pins that premise LOUDLY: if
+    // argument). maxIters = 11 pins that premise LOUDLY — 10 replayed
+    // rounds plus the identity round that detects the fixpoint: if
     // some dataset ever needs > 10 rounds, verify fails with a named
     // exception instead of a silent hash mismatch (ADVICE r14).
     "graph_coreness" -> ((s, dir) =>
-      GraphOps.coreness(supplyEdges(s, dir),
-        assertConvergedWithin = Some(10)).orderBy("node")),
+      GraphOps.coreness(supplyEdges(s, dir), maxIters = 11).orderBy("node")),
 
     // B10: hop-bounded BFS (the Neo4j shortestPath staple) — exact
     // distances ≤ 3 from suppliers {1, 2} over the quantity ≤ 1 slice.

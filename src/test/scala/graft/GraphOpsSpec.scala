@@ -440,12 +440,14 @@ class GraphOpsSpec extends SparkSpec {
     val e = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L),
       (9L, 10L), (10L, 11L), (11L, 12L))
-    def run() = GraphOps.coreness(e, assertConvergedWithin = Some(10))
+    // maxIters = 11: the graph_coreness bound (10 oracle rounds + the
+    // identity round that detects the fixpoint)
+    def run() = GraphOps.coreness(e, maxIters = 11)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val full = run() // |E| under the default 10M cutover → full loop
     spark.conf.set("graft.coreness.deltaEdges", "0") // force delta loop
     try {
-      val delta = run() // assertConvergedWithin exercised on BOTH paths
+      val delta = run() // the maxIters bound exercised on BOTH paths
       assert(delta == full, s"delta=$delta full=$full")
       assert(full == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
         5L -> 1L, 6L -> 1L, 7L -> 1L, 8L -> 1L, 9L -> 1L, 10L -> 1L,
@@ -453,23 +455,26 @@ class GraphOpsSpec extends SparkSpec {
     } finally spark.conf.unset("graft.coreness.deltaEdges")
   }
 
-  test("coreness: assertConvergedWithin throws loudly past the bound, passes at it") {
-    // triangle + tail converges in ≤ 2 rounds: bound 2 passes
+  test("coreness: maxIters throws loudly past the bound, passes at it, on both loops") {
+    // triangle + tail reaches its fixpoint in round 1; round 2 is the
+    // identity round that detects it, so maxIters = 2 is the bound
     val e = edges((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).localCheckpoint()
-    val ok = GraphOps.coreness(e, assertConvergedWithin = Some(2)).collect()
-    assert(ok.nonEmpty)
-    // bound 0 cannot hold for any graph whose degrees != coreness:
-    // the named exception fires instead of a silent oracle mismatch
-    val ex = intercept[IllegalStateException] {
-      GraphOps.coreness(e, assertConvergedWithin = Some(0)).collect()
+    def check(loop: String): Unit = {
+      val ok = GraphOps.coreness(e, maxIters = 2).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(ok == Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 1L), s"$loop: $ok")
+      // one round short: the named exception fires instead of a
+      // silent oracle mismatch
+      val ex = intercept[IllegalStateException] {
+        GraphOps.coreness(e, maxIters = 1).collect()
+      }
+      assert(ex.getMessage.contains("coreness") &&
+        ex.getMessage.contains("maxIters=1"), s"$loop: ${ex.getMessage}")
     }
-    assert(ex.getMessage.contains("oracle replays only 0"), ex.getMessage)
-    // maxIters truncation also trips the assertion (changed > 0)
-    val ex2 = intercept[IllegalStateException] {
-      GraphOps.coreness(e, maxIters = 1,
-        assertConvergedWithin = Some(10)).collect()
-    }
-    assert(ex2.getMessage.contains("converged=false"), ex2.getMessage)
+    check("full")
+    spark.conf.set("graft.coreness.deltaEdges", "0") // force delta loop
+    try check("delta")
+    finally spark.conf.unset("graft.coreness.deltaEdges")
   }
 
   test("randomWalks: hand-checked hops, walk shape, determinism, edge validity") {
