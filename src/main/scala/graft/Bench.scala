@@ -35,13 +35,11 @@ object Bench {
     // final ordering — the work the operator actually claims.
     def exec(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
-    // SPARK_GRAFT_ONLY=a,b,c — time only the named queries (local
-    // iteration aid; the driver never sets it, so round benches still
-    // cover the full pack)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // SPARK_GRAFT_ONLY=a,b,c — time only the named queries (unset:
+    // the full pack)
+    val only = SparkEntry.selectedEntries().toSet
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only(name) }
     val results = selected.map { case (name, fn) =>
       try exec(fn(spark, sfDir)) catch { case _: Throwable => () }
       // min of two timed runs: single-run numbers on a 32-thread local

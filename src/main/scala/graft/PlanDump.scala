@@ -21,19 +21,12 @@ object PlanDump {
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "r15")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX",
       sys.error("PlanDump: set SPARK_GRAFT_PLAN_SUFFIX=before|after"))
-    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY",
-      sys.error("PlanDump: set SPARK_GRAFT_ONLY=<entry[,entry]>"))
-      .split(",").map(_.trim).filter(_.nonEmpty)
+    // validated before the session starts: a typo'd name fails here,
+    // named, not mid-list with the session left running
+    val names = SparkEntry.selectedEntries(Some(sys.env.getOrElse(
+      SparkEntry.OnlyEnv, sys.error("PlanDump: set SPARK_GRAFT_ONLY=<entry[,entry]>"))))
     val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // validate up front (ADVICE r15): a typo'd entry name used to
-    // throw a bare NoSuchElementException mid-list with the session
-    // left running and no hint which name was bad
-    val known = SparkEntry.queries.keySet
-    val bad = names.filterNot(known)
-    if (bad.nonEmpty)
-      sys.error(s"PlanDump: unknown entr${if (bad.length == 1) "y" else "ies"} " +
-        s"${bad.mkString(", ")} — valid names are SparkEntry.queries keys")
     val dir = Paths.get(s"plans/$tag")
     Files.createDirectories(dir)
     try names.foreach { name =>

@@ -45,9 +45,8 @@ object Probe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "6").toInt
-    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY",
-      sys.error("Probe: set SPARK_GRAFT_ONLY=<entry[,entry]>"))
-      .split(",").map(_.trim).filter(_.nonEmpty)
+    val names = SparkEntry.selectedEntries(Some(sys.env.getOrElse(
+      SparkEntry.OnlyEnv, sys.error("Probe: set SPARK_GRAFT_ONLY=<entry[,entry]>"))))
     val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 

@@ -17,8 +17,11 @@ object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val name = sys.env.getOrElse("SPARK_GRAFT_ONLY",
-      sys.error("ProbeJobs: set SPARK_GRAFT_ONLY=<entry>"))
+    val name = SparkEntry.selectedEntries(Some(sys.env.getOrElse(
+        SparkEntry.OnlyEnv, sys.error("ProbeJobs: set SPARK_GRAFT_ONLY=<entry>")))) match {
+      case Seq(one) => one
+      case many => sys.error(s"ProbeJobs: name one entry, got ${many.mkString(", ")}")
+    }
     val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 

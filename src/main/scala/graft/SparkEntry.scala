@@ -38,4 +38,29 @@ object SparkEntry {
   /** Entries that run the Structured Streaming engine in the timed
     * path — benched apart as `stream_secs` (engine startup dominates). */
   def streamNames: Set[String] = packs.flatMap(_.streams).toSet
+
+  /** The environment variable naming the entries a main runs:
+    * `SPARK_GRAFT_ONLY=a,b,c` (a local iteration aid — the driver
+    * never sets it). */
+  val OnlyEnv = "SPARK_GRAFT_ONLY"
+
+  /** The entries a main runs, given the [[OnlyEnv]] value: every
+    * entry (sorted) when it is unset, else the listed names in order,
+    * items trimmed and blank items dropped. A name that is no entry
+    * throws, naming it, and so does a list that names none: either
+    * would otherwise run nothing and report a clean pass. */
+  def selectedEntries(only: Option[String] = sys.env.get(OnlyEnv)): Seq[String] =
+    only match {
+      case None => queries.keys.toSeq.sorted
+      case Some(spec) =>
+        val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+        val bad = names.filterNot(queries.contains)
+        if (bad.nonEmpty)
+          throw new IllegalArgumentException(s"$OnlyEnv: unknown entr" +
+            s"${if (bad.size == 1) "y" else "ies"} ${bad.mkString(", ")}" +
+            " (valid names are the SparkEntry.queries keys)")
+        if (names.isEmpty)
+          throw new IllegalArgumentException(s"$OnlyEnv='$spec' names no entry")
+        names
+    }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -240,19 +240,6 @@ object GraphOps {
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_degree"))
   }
 
-  /** [[coreness]] runs the tight-delta loop only past this many
-    * undirected edges (overridable via `graft.coreness.deltaEdges`
-    * conf or `GRAFT_CORENESS_DELTA_EDGES` env — the walk-broadcast
-    * budget pattern): below it the delta's fixed per-round overhead
-    * (two extra |E| cache scans + 3 extra joins' job latency) costs
-    * more than the restricted recompute saves (measured: sf0.1
-    * |E|=1.2M full 4.8–5.4 s vs delta 5.6–6.0 s; 100× |E|=117M full
-    * 65–75 s vs delta 43.5–46 s — quiet box, identical output). */
-  private def corenessDeltaEdges(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.coreness.deltaEdges")
-      .orElse(sys.env.get("GRAFT_CORENESS_DELTA_EDGES"))
-      .map(_.toLong).getOrElse(10000000L)
-
   /** B31 (r14): FULL core decomposition — coreness(v) for EVERY node
     * (Neo4j GDS `kcore`'s coreness output; [[kCore]] answers the
     * membership question for ONE k) via the distributed H-index
@@ -269,9 +256,9 @@ object GraphOps {
     * relation against the |V|-row coreness vector (only the vector
     * exchanges — the r15 fix for the r14 form that pinned on a but
     * joined on b, re-exchanging |E| per round at 62.8 s of the 100×
-    * bench) + one |E|-bounded hash-agg exchange. BELOW the
-    * [[corenessDeltaEdges]] cutover the loop recomputes the FULL
-    * vector each round with sum-convergence (monotone non-increasing
+    * bench) + one |E|-bounded hash-agg exchange. Up to `deltaEdges`
+    * undirected edges the loop recomputes the FULL vector each round
+    * with sum-convergence (monotone non-increasing
     * per node ⇒ the integer sum strictly decreases until the
     * fixpoint — the dedupClusters min-label argument), i.e. exactly
     * 1 job per round (the sum is observed by the checkpoint job,
@@ -283,8 +270,11 @@ object GraphOps {
     * r15 delta 6.3–7.1 s, tight delta 5.6–6.0 s (the delta's fixed
     * per-round scans + extra join jobs dominate at this size); 100×
     * |E|=117M — full 65–75 s, r15 delta 84.5 s, tight delta
-    * 43.5–46 s. The per-node collect is bounded by true degree (the
-    * neighborArrays adjacency stance); the H-index itself is a
+    * 43.5–46 s — hence the 10M-edge default cutover: below it the
+    * delta's fixed per-round overhead (two extra |E| cache scans + 3
+    * extra joins' job latency) costs more than the restricted
+    * recompute saves. The per-node collect is bounded by true degree
+    * (the neighborArrays adjacency stance); the H-index itself is a
     * size(filter(...)) over the sorted value array (measured equal
     * to a count-only agg — the join, not the collect, is the round's
     * cost). Rounds needed ≈ graph-dependent but small (≤ 6 observed
@@ -312,7 +302,8 @@ object GraphOps {
     * count) — documented here as the named escape hatch rather than
     * silently capping degrees, because a cap CHANGES coreness
     * semantics where B9's sampled-neighborhood cap does not. */
-  def coreness(edges: DataFrame, maxIters: Int = 64): DataFrame = {
+  def coreness(edges: DataFrame, maxIters: Int = 64,
+               deltaEdges: Long = 10000000L): DataFrame = {
     // ONE pinned orientation (r16 — the r15 form pinned und AND both
     // keyed copies, three |E| caches where the loop reads one): undB,
     // pre-partitioned + pre-sorted on the per-round join key b, so
@@ -340,7 +331,7 @@ object GraphOps {
         // positions (tie order within equal values is irrelevant)
         size(filter(col("cs"), (x, i) => x >= (i + 1).cast("long")))
           .cast("long").as("c"))
-    val c = if (degSum / 2 <= corenessDeltaEdges(edges)) {
+    val c = if (degSum / 2 <= deltaEdges) {
       // FULL recompute per round, one checkpointed H-pass each;
       // per-node monotone non-increase ⇒ the sum strictly decreases
       // until the fixpoint, so sum-equality IS the identity round
@@ -798,10 +789,9 @@ object GraphOps {
     * pre-partitioned + pre-sorted |E| relation against the |V|
     * assignment (only the assignment exchanges — the r11 loop
     * invariant discipline), then two |V|-scale hash-aggs (Σtot,
-    * per-node argmax) and |V| equi-joins. One level only: the GDS
-    * coarsening phase re-runs this on the community supergraph —
-    * composable later, but the local-moving level is where the
-    * communities (and the cost) live.
+    * per-node argmax) and |V| equi-joins — the rounds are
+    * [[louvainMoves]], shared with [[louvainLevelWeighted]], which
+    * [[louvainTwoLevel]] runs on the coarsened community supergraph.
     *
     * Output: (node, community) after `rounds` rounds.
     */
@@ -822,38 +812,60 @@ object GraphOps {
   /** [[louvainLevel]] body over an ALREADY pinned, b-keyed undirected
     * relation — shared with [[louvainTwoLevel]], whose coarsen step
     * reads the same pinned copy instead of materializing its own
-    * unkeyed one (r16). */
+    * unkeyed one (r16). Supplies the count-shaped k_{i,c} gather, deg
+    * and m; the rounds are [[louvainMoves]]. */
   private def louvainLevelKeyed(undB: DataFrame, rounds: Int): DataFrame = {
     val deg = undB.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
       .transform(pin)
     val m = undB.count() / 2 // scalar: undirected edge count
-    // deg RIDES the assignment (r15 opt: guide §2.4 — two of the five
-    // per-round joins existed only to re-attach deg to state keyed the
-    // same way; carrying the extra long removes both |V| exchanges):
-    // Σtot folds straight off assign, and `best` reads (cur, deg) from
-    // ONE assign join instead of separate deg + assign joins. Identical
-    // arithmetic, identical argmax — only the join count changes.
+    louvainMoves(deg, m, rounds, count(lit(1))) { (assign, t) =>
+      undB.join(assign.select(col("node"), col("community")),
+          col("b") === col("node"))
+        .filter(louvainMover(col("a"), t))
+        .select(col("a"), col("community"))
+    }
+  }
+
+  /** Round t's alternating-parity mover mask over a node column (the
+    * swap-cycle damping, [[louvainLevel]] scaladoc). */
+  private def louvainMover(node: Column, t: Int): Column =
+    (node + lit(t.toLong)) % 2 === 0
+
+  /** THE Louvain local-moving loop, shared by [[louvainLevel]] and
+    * [[louvainLevelWeighted]]: every node starts in its own community
+    * and `rounds` synchronous rounds follow. Each round folds Σtot off
+    * the assignment, gathers this round's movers' links
+    * (`gather(assign, t)` → (a, community, …) rows, this round's movers
+    * only: gathering + argmax cost halves, and the parity mask is the
+    * swap-cycle damping), sums them into k_{i,c} with `kicAgg`, takes
+    * the integer-gain argmax 2m·k_{i,c} − k_i·Σtot'_c (min-community
+    * ties) and updates the assignment.
+    *
+    * deg RIDES the assignment (r15 opt: guide §2.4 — two of the five
+    * per-round joins existed only to re-attach deg to state keyed the
+    * same way; carrying the extra long removes both |V| exchanges):
+    * Σtot folds straight off assign, and `best` reads (cur, deg) from
+    * ONE assign join instead of separate deg + assign joins.
+    *
+    * `deg` is the pinned (node, deg) degree mass, `m` the undirected
+    * mass. Output: (node, community). */
+  private def louvainMoves(deg: DataFrame, m: Long, rounds: Int,
+      kicAgg: Column)(gather: (DataFrame, Int) => DataFrame): DataFrame = {
     var assign = deg.select(col("node"), col("node").as("community"),
       col("deg")).localCheckpoint()
     for (t <- 1 to rounds) {
       val tot = assign
         .groupBy("community").agg(sum(col("deg")).as("tot"))
-      // this round's movers only: gathering + argmax cost halves, and
-      // the parity mask is the swap-cycle damping (scaladoc above)
       // r16 (guide §2.4): key the gathered rows on `a` ALONE before
       // the k_{i,c} agg — HashPartitioning(a) satisfies the agg's
       // (a, community) clustering AND every downstream consumer
       // (the `best` join on a, the per-node argmax, the final
       // assignment join), so the round runs ONE gather-side exchange
       // where the (a, community)-keyed agg left more behind it.
-      // Same rows, same counts — only the exchange key changes.
-      val kic = undB.join(assign.select(col("node"), col("community")),
-          col("b") === col("node"))
-        .filter((col("a") + lit(t.toLong)) % 2 === 0)
-        .select(col("a"), col("community"))
+      val kic = gather(assign, t)
         .repartition(col("a"))
         .groupBy(col("a"), col("community"))
-        .agg(count(lit(1)).as("kic"))
+        .agg(kicAgg.as("kic"))
       val best = kic
         .join(assign.select(col("node").as("a"),
           col("community").as("cur"), col("deg")), "a")
@@ -866,7 +878,7 @@ object GraphOps {
         .agg(min(struct((-col("gain")).as("ng"), col("community").as("c")))
           .as("best"))
         .select(col("node"), col("best.c").as("next"))
-      // movers adopt their argmax (every mover has ≥1 neighbor, so
+      // movers adopt their argmax (every mover has ≥1 candidate, so
       // `next` exists for all of them); holders ride the left join
       assign = assign.join(best, Seq("node"), "left")
         .select(col("node"),
@@ -914,8 +926,9 @@ object GraphOps {
     * the expected outcome rather than luck.
     *
     * [[louvainLevel]] is this recurrence at w ≡ 1 on a loop-free
-    * relation; it keeps its own count-shaped plan (cheaper — no
-    * weight column rides the |E| relation).
+    * relation; both run the rounds of [[louvainMoves]], and it keeps
+    * only its own count-shaped gather, deg and m (cheaper — no weight
+    * column rides the |E| relation).
     *
     * Output: (node, community) after `rounds` rounds — node here is a
     * supergraph vertex id (a level-1 community id when called from
@@ -934,46 +947,16 @@ object GraphOps {
     // Σ_rows w counts every undirected mass unit twice (symmetric rows;
     // a self-loop row's weight carries both directions itself)
     val m = uB.agg(sum(col("w"))).head.getLong(0) / 2
-    // deg rides the assignment — the louvainLevel r15 join-count
-    // rework (guide §2.4), same two-joins-per-round saving here
-    var assign = deg.select(col("node"), col("node").as("community"),
-      col("deg")).localCheckpoint()
-    for (t <- 1 to rounds) {
-      val tot = assign
-        .groupBy("community").agg(sum(col("deg")).as("tot"))
-      val gathered = uB.join(assign.select(col("node"), col("community")),
+    louvainMoves(deg, m, rounds, sum(col("w"))) { (assign, t) =>
+      uB.join(assign.select(col("node"), col("community")),
           col("b") === col("node"))
-        .filter((col("a") + lit(t.toLong)) % 2 === 0 &&
+        .filter(louvainMover(col("a"), t) &&
           col("a") =!= col("b")) // self-loops never enter k_{i,c}
         .select(col("a"), col("community"), col("w"))
-      // explicit stay candidate per mover (scaladoc: STAY CANDIDATE)
-      val stay = assign.filter((col("node") + lit(t.toLong)) % 2 === 0)
-        .select(col("node").as("a"), col("community"), lit(0L).as("w"))
-      // r16: one a-keyed exchange feeds the agg, the `best` join, the
-      // argmax and the assignment join (the louvainLevelKeyed move)
-      val kic = gathered.unionByName(stay)
-        .repartition(col("a"))
-        .groupBy(col("a"), col("community"))
-        .agg(sum(col("w")).as("kic"))
-      val best = kic
-        .join(assign.select(col("node").as("a"),
-          col("community").as("cur"), col("deg")), "a")
-        .join(tot, "community")
-        .select(col("a").as("node"), col("community"),
-          (lit(2L * m) * col("kic") - col("deg") *
-            (col("tot") - when(col("community") === col("cur"), col("deg"))
-              .otherwise(lit(0L)))).as("gain"))
-        .groupBy("node")
-        .agg(min(struct((-col("gain")).as("ng"), col("community").as("c")))
-          .as("best"))
-        .select(col("node"), col("best.c").as("next"))
-      assign = assign.join(best, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("next"), col("community")).as("community"),
-          col("deg"))
-        .localCheckpoint()
+        // explicit stay candidate per mover (scaladoc: STAY CANDIDATE)
+        .unionByName(assign.filter(louvainMover(col("node"), t))
+          .select(col("node").as("a"), col("community"), lit(0L).as("w")))
     }
-    assign.select(col("node"), col("community"))
   }
 
   /** Two-level Louvain (the GDS `louvain` recursion with ONE
@@ -1278,13 +1261,11 @@ object GraphOps {
     *   Dₜ = Σ_{out(u)=0} rankₜ(u)
     *
     * Fixed iteration count (oracle replays the identical recurrence).
-    * Per round: one join + one hash-agg for the contribution sums,
-    * plus the dangling term Dₜ as ONE 1-row aggregate broadcast back
-    * via the repo's scalar-crossJoin shape — never a collect inside
-    * the loop, never a single-partition window. Nodes with no
-    * in-edges ride a left join (their contribution sum is null → 0).
-    * Σ rank stays exactly 1 per round up to FP (mass conservation —
-    * pinned by spec).
+    * The rounds are [[directedRankRounds]], shared with the weighted
+    * and personalized variants; this variant supplies the 1/out(u)
+    * share and the uniform (1−d)/N teleport and Dₜ/N dangling terms
+    * ([[uniformRankWithN]]). Σ rank stays exactly 1 per round up to FP
+    * (mass conservation — pinned by spec).
     *
     * Returns (ranks, N) like [[pageRankWithN]].
     */
@@ -1293,52 +1274,8 @@ object GraphOps {
     require(iters >= 1, s"pageRankDirected: iters must be >= 1, got $iters")
     val e0 = edges.select(col("a"), col("b")).distinct()
       .transform(pin)
-    val nodes = e0.select(col("a").as("node"))
-      .union(e0.select(col("b").as("node"))).distinct()
-      .transform(pin)
-    val outdeg = e0.groupBy("a").agg(count(lit(1)).as("out"))
-    // (a, b, out(a)) — loop-invariant join payload, pinned once,
-    // PRE-PARTITIONED + PRE-SORTED on the per-round join key so the
-    // cached scan satisfies the sort-merge join's requirements and
-    // only the |V| rank vector exchanges per round (the
-    // eigenvectorCentralityWithN r11 shape)
-    val withOut = e0.join(outdeg, "a")
-      .repartition(col("a")).sortWithinPartitions("a")
-      .transform(pin)
-    val n = nodes.count() // scalar collect — model-fit class
-    // the DANGLING FLAG rides the rank state (r15 opt, guide §2.4 —
-    // the same carry-the-invariant move as louvainLevel's deg): a
-    // nullable `out` column marks pure sinks, so the per-round
-    // dangling-mass aggregate is a FILTER over the checkpointed state
-    // instead of a |V| join against a pinned dangling relation, and
-    // the round's update joins the state itself (same node set as
-    // `nodes`, already materialized). 3 joins/round -> 2, identical
-    // arithmetic.
-    var ranks = nodes
-      .join(outdeg.select(col("a").as("node"), col("out")), Seq("node"),
-        "left")
-      .withColumn("rank", lit(1.0 / n))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val dang = ranks.filter(col("out").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
-      val inc = withOut.join(ranks.select(col("node"), col("rank")),
-          col("a") === col("node"))
-        .select(col("b"), (col("rank") / col("out")).as("c"))
-        .groupBy(col("b")).agg(sum(col("c")).as("s"))
-      // localCheckpoint per round (ADVICE r9): each round references
-      // `ranks` TWICE (dangling-mass aggregate + contribution join),
-      // so the lazy tree doubles per iteration without truncation —
-      // the measured HITS failure mode at the 100× pack.
-      ranks = ranks.join(inc, col("node") === col("b"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"), col("out"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("s"), lit(0.0)) + col("dm") / lit(n.toDouble)))
-            .as("rank"))
-        .localCheckpoint()
-    }
-    (ranks.select(col("node"), col("rank")), n)
+    uniformRankWithN(e0, count(lit(1)), col("rank") / col("out"),
+      iters, damping)
   }
 
   /** B34 (r15): WEIGHTED directed PageRank — Neo4j GDS `pageRank`
@@ -1348,11 +1285,11 @@ object GraphOps {
     * arrive as EXACT integer longs (summed quantities), so W(u) is
     * exact and the per-edge share is ONE double division both
     * engines evaluate identically; 6dp output rounding absorbs
-    * sum-order ulps (the pageRankDirectedWithN stance). Identical
-    * loop discipline: invariant (a, b, w, W) payload pinned
-    * pre-partitioned + pre-sorted on the join key, dangling mass
-    * redistributed uniformly, rank state localCheckpoint'ed per
-    * round (referenced twice). Fixed iters keeps the recurrence a
+    * sum-order ulps (the pageRankDirectedWithN stance). The rounds
+    * are [[directedRankRounds]] (through [[uniformRankWithN]], the
+    * [[pageRankDirectedWithN]] body with W(u) in the `out` column):
+    * only the per-edge share differs, so at w ≡ 1 the two variants
+    * return the same doubles. Fixed iters keeps the recurrence a
     * pure function of the weighted edge list for the DuckDB
     * chained-CTE replay. */
   def pageRankWeightedWithN(wEdges: DataFrame, iters: Int,
@@ -1360,38 +1297,91 @@ object GraphOps {
     require(iters >= 1, s"pageRankWeighted: iters must be >= 1, got $iters")
     val e0 = wEdges.select(col("a"), col("b"), col("w"))
       .transform(pin)
+    uniformRankWithN(e0, sum(col("w")), col("rank") * col("w") / col("out"),
+      iters, damping)
+  }
+
+  /** The uniform-teleport directed ranks ([[pageRankDirectedWithN]],
+    * [[pageRankWeightedWithN]]) over the pinned edge relation `e0`:
+    * N collected once, ranks start at 1/N, and teleport and dangling
+    * mass re-enter uniformly ((1−d)/N as a literal, Dₜ/N). */
+  private def uniformRankWithN(e0: DataFrame, outMass: Column, share: Column,
+                               iters: Int, damping: Double): (DataFrame, Long) = {
+    val (nodes, out, withOut) = directedPayload(e0, outMass)
+    val n = nodes.count() // scalar collect — model-fit class
+    val init = nodes.join(out, Seq("node"), "left")
+      .withColumn("rank", lit(1.0 / n))
+    (directedRankRounds(withOut, init, iters, damping, share,
+      teleport = lit((1.0 - damping) / n),
+      dangling = col("dm") / lit(n.toDouble)), n)
+  }
+
+  /** The directed-rank invariants over the pinned edge relation `e0`
+    * (cols `a`, `b`, optionally `w`): the pinned node relation, each
+    * source's out-mass `outMass` as (node, out), and the per-round
+    * payload (a, b, …, out) pinned once, PRE-PARTITIONED +
+    * PRE-SORTED on the per-round join key so the cached scan
+    * satisfies the sort-merge join's requirements and only the |V|
+    * rank vector exchanges per round (the eigenvectorCentralityWithN
+    * r11 shape). Builds plans only — no job runs here. */
+  private def directedPayload(e0: DataFrame,
+      outMass: Column): (DataFrame, DataFrame, DataFrame) = {
     val nodes = e0.select(col("a").as("node"))
       .union(e0.select(col("b").as("node"))).distinct()
       .transform(pin)
-    val outw = e0.groupBy("a").agg(sum(col("w")).as("outW"))
-    val withW = e0.join(outw, "a")
+    val out = e0.groupBy("a").agg(outMass.as("out"))
+    val withOut = e0.join(out, "a")
       .repartition(col("a")).sortWithinPartitions("a")
       .transform(pin)
-    val n = nodes.count() // scalar collect — model-fit class
-    // dangling flag rides the rank state (the pageRankDirectedWithN
-    // r15 rework — one fewer |V| join per round, identical arithmetic)
-    var ranks = nodes
-      .join(outw.select(col("a").as("node"), col("outW")), Seq("node"),
-        "left")
-      .withColumn("rank", lit(1.0 / n))
-      .localCheckpoint()
+    (nodes, out.select(col("a").as("node"), col("out")), withOut)
+  }
+
+  /** THE directed-rank round, shared by [[pageRankDirectedWithN]],
+    * [[pageRankWeightedWithN]] and [[personalizedPageRank]]:
+    *
+    *   rankₜ₊₁(v) = teleport + d·( Σ_{u→v} share(u,v) + dangling )
+    *
+    * with `dm` = Σ rankₜ over the dangling nodes (a null `out`). Each
+    * round is one join + one hash-agg for the contribution sums, plus
+    * `dm` as ONE 1-row aggregate broadcast back via the repo's
+    * scalar-crossJoin shape — never a collect inside the loop, never
+    * a single-partition window. Nodes with no in-edges ride a left
+    * join (their contribution sum is null → 0).
+    *
+    * The LOOP-INVARIANT columns of `init` (the nullable `out` dangling
+    * flag, the personalized teleport `p`) ride the rank state (r15
+    * opt, guide §2.4 — the louvainLevel deg carry): the dangling mass
+    * is a FILTER over the checkpointed state and the update joins the
+    * state itself, so a round needs no dangling or seed join — 2 joins
+    * per round, identical arithmetic. The state is localCheckpoint'ed
+    * per round (ADVICE r9): each round references it TWICE (dangling
+    * aggregate + contribution join), so the lazy tree doubles per
+    * iteration without truncation — the measured HITS failure mode at
+    * the 100× pack.
+    *
+    * `withOut` is the [[directedPayload]] relation, `init` the
+    * (node, out, …, rank) starting state; `share` reads the payload
+    * row and the joined `rank`, `teleport` and `dangling` the state
+    * row and `dm`. Output: (node, rank). */
+  private def directedRankRounds(withOut: DataFrame, init: DataFrame,
+      iters: Int, damping: Double, share: Column, teleport: Column,
+      dangling: Column): DataFrame = {
+    val carried = init.columns.filter(_ != "rank").map(col).toSeq
+    var ranks = init.localCheckpoint()
     for (_ <- 1 to iters) {
-      val dang = ranks.filter(col("outW").isNull)
+      val dang = ranks.filter(col("out").isNull)
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
-      val inc = withW.join(ranks.select(col("node"), col("rank")),
+      val inc = withOut.join(ranks.select(col("node"), col("rank")),
           col("a") === col("node"))
-        .select(col("b"),
-          (col("rank") * col("w") / col("outW")).as("c"))
+        .select(col("b"), share.as("c"))
         .groupBy(col("b")).agg(sum(col("c")).as("s"))
       ranks = ranks.join(inc, col("node") === col("b"), "left")
         .crossJoin(broadcast(dang))
-        .select(col("node"), col("outW"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("s"), lit(0.0)) + col("dm") / lit(n.toDouble)))
-            .as("rank"))
+        .select(carried :+ (teleport + lit(damping) *
+          (coalesce(col("s"), lit(0.0)) + dangling)).as("rank"): _*)
         .localCheckpoint()
     }
-    (ranks.select(col("node"), col("rank")), n)
+    ranks.select(col("node"), col("rank"))
   }
 
   /** B20 (r10): PERSONALIZED PageRank (Neo4j GDS `pageRank` with
@@ -1408,14 +1398,13 @@ object GraphOps {
     * global PageRank gives them) — that sparsity is the point of the
     * personalized variant and what the spec pins.
     *
-    * Same loop discipline as [[pageRankDirectedWithN]]: invariants
-    * (edge+outdeg payload, dangling set, node relation) pinned once;
-    * the rank state localCheckpoint'ed per round because it is
-    * referenced twice (dangling aggregate + contribution join). The
-    * seed distribution is a |seeds|-row broadcast — never a shuffle
-    * key. Fixed `iters` keeps the recurrence a pure function of
-    * (edges, seeds) for the DuckDB chained-CTE replay; 6dp output
-    * rounding absorbs sum-order ulps (callers).
+    * The rounds are [[directedRankRounds]] (the
+    * [[pageRankDirectedWithN]] loop) with p riding the rank state as
+    * the teleport and dangling weight. The seed distribution is a
+    * |seeds|-row broadcast — never a shuffle key. Fixed `iters` keeps
+    * the recurrence a pure function of (edges, seeds) for the DuckDB
+    * chained-CTE replay; 6dp output rounding absorbs sum-order ulps
+    * (callers).
     *
     * Output: (node, rank) for EVERY node of the graph. */
   def personalizedPageRank(edges: DataFrame, seeds: Seq[Long], iters: Int,
@@ -1426,15 +1415,7 @@ object GraphOps {
     import spark.implicits._
     val e0 = edges.select(col("a"), col("b")).distinct()
       .transform(pin)
-    val nodes = e0.select(col("a").as("node"))
-      .union(e0.select(col("b").as("node"))).distinct()
-      .transform(pin)
-    val outdeg = e0.groupBy("a").agg(count(lit(1)).as("out"))
-    // pre-partitioned + pre-sorted on the per-round join key (the
-    // eigenvector r11 shape): only the rank vector exchanges per round
-    val withOut = e0.join(outdeg, "a")
-      .repartition(col("a")).sortWithinPartitions("a")
-      .transform(pin)
+    val (nodes, out, withOut) = directedPayload(e0, count(lit(1)))
     // Seeds absent from the edge relation would silently drop their
     // teleport + dangling share (the left join onto `nodes` loses
     // them), leaving total mass < 1 and contradicting the mass
@@ -1448,37 +1429,16 @@ object GraphOps {
       "personalizedPageRank: no seed exists in the graph")
     val seedP = live.toDF("node")
       .withColumn("p", lit(1.0 / live.size))
-    // LOOP-INVARIANT columns ride the rank state (r15 opt, guide §2.4
-    // — the louvainLevel deg carry): the teleport p(v) (coalesced 0
-    // off-seed) and the nullable out-degree (dangling flag) become
-    // state columns, so a round needs NO seedP broadcast join and NO
-    // dangling join — the dangling mass is a filter over the
-    // checkpointed state and the update joins the state itself.
-    // 4 joins/round -> 2, identical arithmetic.
-    var ranks = nodes.join(broadcast(seedP), Seq("node"), "left")
-      .join(outdeg.select(col("a").as("node"), col("out")), Seq("node"),
-        "left")
+    // p(v), coalesced 0 off-seed, rides the state next to `out`
+    val init = nodes.join(broadcast(seedP), Seq("node"), "left")
+      .join(out, Seq("node"), "left")
       .select(col("node"), col("out"),
         coalesce(col("p"), lit(0.0)).as("p"),
         coalesce(col("p"), lit(0.0)).as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val dang = ranks.filter(col("out").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
-      val inc = withOut.join(ranks.select(col("node"), col("rank")),
-          col("a") === col("node"))
-        .select(col("b"), (col("rank") / col("out")).as("c"))
-        .groupBy(col("b")).agg(sum(col("c")).as("s"))
-      ranks = ranks.join(inc, col("node") === col("b"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"), col("out"), col("p"),
-          (lit(1.0 - damping) * col("p") +
-            lit(damping) * (coalesce(col("s"), lit(0.0)) +
-              col("dm") * col("p")))
-            .as("rank"))
-        .localCheckpoint()
-    }
-    ranks.select(col("node"), col("rank"))
+    directedRankRounds(withOut, init, iters, damping,
+      share = col("rank") / col("out"),
+      teleport = lit(1.0 - damping) * col("p"),
+      dangling = col("dm") * col("p"))
   }
 
   /** B21 (r10): DETERMINISTIC random walks over the undirected graph
@@ -1505,7 +1465,10 @@ object GraphOps {
     * is ONE equi-join of the |walks| frontier against it, state
     * localCheckpoint'ed per step. Nothing is ever all-pairs, and the
     * trace volume is |seeds|·walksPerSeed·(steps+1) rows by
-    * construction — the caller prices the corpus up front.
+    * construction — the caller prices the corpus up front. The loop
+    * is [[walks]], shared with [[node2vecWalks]]; `broadcastBytes` is
+    * its frontier broadcast budget (the step join's cutover, measured
+    * default 1 MB — [[walks]] scaladoc).
     *
     * Contract: seeds not present in the graph are dropped (semi-join)
     * rather than emitting a dead 1-row walk; |node·walksPerSeed|
@@ -1522,9 +1485,50 @@ object GraphOps {
     *
     * Output: (walk_id, step, node) — step 0 is the seed row. */
   def randomWalks(edges: DataFrame, seeds: DataFrame, walksPerSeed: Int,
-                  steps: Int): DataFrame = {
+                  steps: Int, broadcastBytes: Long = 1L << 20): DataFrame = {
     require(walksPerSeed >= 1, s"randomWalks: walksPerSeed >= 1, got $walksPerSeed")
     require(steps >= 1, s"randomWalks: steps >= 1, got $steps")
+    walks(edges, seeds, walksPerSeed, steps, broadcastBytes)(_ => FrontierRowBytes) {
+      (walker, cur, i) => walker.firstOrder(cur, i)
+    }
+  }
+
+  /** THE walk loop, shared by [[randomWalks]] and [[node2vecWalks]]:
+    * pins the undirected relation and its SORTED neighbor arrays
+    * (node, nb, deg), starts `walksPerSeed` walks from every seed
+    * present in the graph (walk_id = node·walksPerSeed + k), picks
+    * the step join, then runs `step(walker, cur, i)` for i = 1 to
+    * `steps` — each step's frontier (walk_id, …, node) is
+    * localCheckpoint'ed and its nodes appended to the trace.
+    *
+    * Step join: BROADCAST the frontier while it fits (never shuffle
+    * the adjacency then: the frontier is |seeds|·walksPerSeed rows by
+    * construction, while the adjacency side carries every neighbor
+    * array — a stats-blind shuffle join here exchanged the full array
+    * relation per step, measured ~12 s of the 100× entry). But the
+    * frontier is |walks|-proportional, NOT constant: with
+    * |V|-proportional seeding a real 100× node scale-up pushes the
+    * per-step re-broadcast past Spark's 8 GB relation ceiling and
+    * onto the driver (VERDICT r13 weak). CUTOVER: once |walks| ×
+    * `rowBytes(adjacency)` passes `broadcastBytes`, pin the adjacency
+    * pre-partitioned + pre-sorted on `node` (the eigenvector r11
+    * loop-invariant shape) and let the small side — the frontier —
+    * exchange per step instead.
+    *
+    * The 1 MB default budget is MEASURED, not guessed (r14, flat100
+    * pack, 28.6k-walk fleet): the pinned pre-partitioned adjacency +
+    * frontier-exchange SMJ beat per-step re-broadcast at 100× for
+    * BOTH operators (node2vec 17.7 → 11.9 s at ~18.5 MB payload,
+    * randomWalks 7.2 → 5.4 s at ~1.8 MB), while at sf0.1 (sub-200 KB
+    * frontiers) the two are within noise (broadcast 1.23/1.91 s vs
+    * shuffle 1.39/1.99). So the default keeps broadcast ONLY for tiny
+    * fleets — where per-step shuffle-stage scheduling is pure
+    * overhead and a thousand-executor cluster is better served by one
+    * small broadcast — and cuts over at 1 MB, far under Spark's 8 GB
+    * broadcast ceiling and any driver-heap concern (the r13 weak). */
+  private def walks(edges: DataFrame, seeds: DataFrame, walksPerSeed: Int,
+      steps: Int, broadcastBytes: Long)(rowBytes: DataFrame => Long)(
+      step: (Walker, DataFrame, Int) => DataFrame): DataFrame = {
     val und = undirected(edges).transform(pin)
     val adj = neighborArrays(und, "a", "b", sorted = true)
       .select(col("node"), col("nbrs").as("nb"), col("deg"))
@@ -1535,59 +1539,47 @@ object GraphOps {
       .select((col("node") * walksPerSeed + col("w")).as("walk_id"),
         col("node"))
       .localCheckpoint()
-    // BROADCAST the frontier while it fits (never shuffle the
-    // adjacency then: the frontier is |seeds|·walksPerSeed rows by
-    // construction, while the adjacency side carries every neighbor
-    // array — a stats-blind shuffle join here exchanged the full
-    // array relation per step, measured ~12 s of the 100× entry).
-    // But the frontier is |walks|-proportional, NOT constant: with
-    // |V|-proportional seeding a real 100× node scale-up pushes the
-    // per-step re-broadcast past Spark's 8 GB relation ceiling and
-    // onto the driver (VERDICT r13 weak). CUTOVER: past the payload
-    // budget, pin the adjacency pre-partitioned + pre-sorted on
-    // `node` (the eigenvector r11 loop-invariant shape) and let the
-    // small side — the frontier — exchange per step instead.
     val nWalks = cur.count() // bounded scalar: walk-fleet size
-    val bcast = nWalks * FrontierRowBytes <= walkBroadcastBudget(edges)
-    val adjS = if (bcast) adj
+    val bcast = nWalks * rowBytes(adj) <= broadcastBytes
+    val walker = new Walker(
+      if (bcast) adj
       else adj.repartition(col("node")).sortWithinPartitions("node")
-        .transform(pin)
+        .transform(pin),
+      bcast)
     var acc = cur.select(col("walk_id"), lit(0).as("step"), col("node"))
     for (i <- 1 to steps) {
-      val j = if (bcast) adjS.join(broadcast(cur), "node")
-        else adjS.join(cur, "node")
-      cur = j
-        .select(col("walk_id"),
-          element_at(col("nb"),
-            (pmod(col("walk_id") * lit(1000003L) + lit(10007L * i) +
-                col("node") * lit(101L), lit(1000000007L)) % col("deg"))
-              .cast("int") + 1).as("node"))
-        .localCheckpoint()
+      cur = step(walker, cur, i).localCheckpoint()
       acc = acc.union(cur.select(col("walk_id"), lit(i).as("step"),
         col("node")))
     }
     acc
   }
 
-  /** Broadcast budget (bytes) for the walk family's per-step frontier
-    * relation. MEASURED, not guessed (r14, flat100 pack, 28.6k-walk
-    * fleet): the pinned pre-partitioned adjacency + frontier-exchange
-    * SMJ beat per-step re-broadcast at 100× for BOTH operators
-    * (node2vec 17.7 → 11.9 s at ~18.5 MB payload, randomWalks 7.2 →
-    * 5.4 s at ~1.8 MB), while at sf0.1 (sub-200 KB frontiers) the two
-    * are within noise (broadcast 1.23/1.91 s vs shuffle 1.39/1.99).
-    * So the default keeps broadcast ONLY for tiny fleets — where
-    * per-step shuffle-stage scheduling is pure overhead and a
-    * thousand-executor cluster is better served by one small
-    * broadcast — and cuts over at 1 MB, far under Spark's 8 GB
-    * broadcast ceiling and any driver-heap concern (the r13 weak).
-    * Overridable per session via `graft.walk.broadcastBytes` (the
-    * spec forces the shuffle path and asserts walk-for-walk identity)
-    * or the `GRAFT_WALK_BCAST` env (scale probes through Bench). */
-  private def walkBroadcastBudget(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.walk.broadcastBytes")
-      .orElse(sys.env.get("GRAFT_WALK_BCAST"))
-      .map(_.toLong).getOrElse(1L << 20)
+  /** The stepping side of a [[walks]] run: the adjacency `adj`
+    * (node, nb, deg) — pinned and keyed on `node` past the cutover —
+    * and how a frontier-sized relation meets it. */
+  private final class Walker(val adj: DataFrame, bcast: Boolean) {
+    /** A frontier-sized join side: broadcast under the budget,
+      * exchanged against the keyed adjacency past it. */
+    def side(f: DataFrame): DataFrame = if (bcast) broadcast(f) else f
+
+    /** Step i's FIRST-ORDER hop from each walk's current node:
+      * idx = pmod(w·1000003 + i·10007 + node·101, 1000000007) mod deg
+      * into the sorted neighbor array. `carried` columns sit between
+      * walk_id and the new node. */
+    def firstOrder(cur: DataFrame, i: Int, carried: Column*): DataFrame =
+      adj.join(side(cur), "node")
+        .select(col("walk_id") +: carried :+
+          uniformHop(pmod(walkHash(i), lit(1000000007L))).as("node"): _*)
+  }
+
+  /** The walk hash terms shared by every step formula (before pmod). */
+  private def walkHash(i: Int): Column =
+    col("walk_id") * lit(1000003L) + lit(10007L * i) + col("node") * lit(101L)
+
+  /** The neighbor at position h mod deg of the sorted array `nb`. */
+  private def uniformHop(h: Column): Column =
+    element_at(col("nb"), (h % col("deg")).cast("int") + 1)
 
   /** Conservative broadcast-side bytes per plain frontier row (two
     * longs + BytesToBytesMap/row overhead). */
@@ -1620,116 +1612,85 @@ object GraphOps {
     * oracle); same overflow bound on the hash terms. Scale shape: one
     * extra equi-join per step (the prev-side adjacency fetch for the
     * membership class) against the same pinned adjacency — the
-    * frontier stays |seeds|·walksPerSeed rows and is broadcast; the
-    * per-row weighted fold is bounded by true degree, exactly the
-    * candidate volume the unbiased walk already touched.
+    * frontier stays |seeds|·walksPerSeed rows and is broadcast under
+    * the `broadcastBytes` budget (the [[walks]] cutover, priced per
+    * walk by average degree here); the per-row weighted fold is
+    * bounded by true degree, exactly the candidate volume the
+    * unbiased walk already touched. Only the degree-aware budget and
+    * the second-order steps are this operator's own; the seed fleet,
+    * step join and step 1 are [[walks]].
     *
     * Output: (walk_id, step, node) — step 0 is the seed row. */
   def node2vecWalks(edges: DataFrame, seeds: DataFrame, walksPerSeed: Int,
                     steps: Int, wReturn: Long = 1L, wNeighbor: Long = 4L,
-                    wOut: Long = 2L): DataFrame = {
+                    wOut: Long = 2L, broadcastBytes: Long = 1L << 20): DataFrame = {
     require(walksPerSeed >= 1, s"node2vecWalks: walksPerSeed >= 1")
     require(steps >= 1, s"node2vecWalks: steps >= 1")
     require(wReturn >= 0 && wNeighbor >= 0 && wOut >= 0,
       "node2vecWalks: weights must be non-negative")
-    val und = undirected(edges).transform(pin)
-    val adj = neighborArrays(und, "a", "b", sorted = true)
-      .select(col("node"), col("nbrs").as("nb"), col("deg"))
-      .transform(pin)
-    val w0 = seeds.select(col("node")).distinct()
-      .join(adj.select("node"), Seq("node"), "left_semi")
-      .withColumn("w", explode(sequence(lit(0), lit(walksPerSeed - 1))))
-      .select((col("node") * walksPerSeed + col("w")).as("walk_id"),
-        col("node"))
-      .localCheckpoint()
-    // Same frontier-size cutover as [[randomWalks]], with one harder
-    // ceiling (ADVICE r13): the prev-side fetch re-broadcasts rows
-    // that already CARRY the stepped node's neighbor array, so the
-    // second per-step broadcast payload is sum-of-degrees over the
-    // frontier, not |frontier| — budget against
-    // |walks|·(avgDeg·8 + overhead), and past it pin the adjacency
-    // pre-partitioned on its key for BOTH fetches so only the
-    // frontier (and its array-carrying stepped form) exchanges,
-    // distributed over the shuffle instead of through the driver.
-    val nWalks = w0.count() // bounded scalar: walk-fleet size
-    // coalesce: sum(deg) is NULL on an empty adjacency (ADVICE r14) —
-    // the walk set is empty then too, but the budget read must not NPE
-    val degRow = adj.agg(coalesce(sum(col("deg")), lit(0L)),
-      count(lit(1))).head
-    val avgDeg = math.max(1L,
-      degRow.getLong(0) / math.max(1L, degRow.getLong(1)))
-    val bcast =
-      nWalks * (avgDeg * 8L + FrontierRowBytes) <= walkBroadcastBudget(edges)
-    val adjS = if (bcast) adj
-      else adj.repartition(col("node")).sortWithinPartitions("node")
-        .transform(pin)
-    var acc = w0.select(col("walk_id"), lit(0).as("step"), col("node"))
-    // step 1: first-order (no prev) — the randomWalks formula
-    var cur = (if (bcast) adjS.join(broadcast(w0), "node")
-               else adjS.join(w0, "node"))
-      .select(col("walk_id"), col("node").as("prev"),
-        element_at(col("nb"),
-          (pmod(col("walk_id") * lit(1000003L) + lit(10007L) +
-              col("node") * lit(101L), lit(1000000007L)) % col("deg"))
-            .cast("int") + 1).as("node"))
-      .localCheckpoint()
-    acc = acc.union(cur.select(col("walk_id"), lit(1).as("step"),
-      col("node")))
-    val prevAdj = adjS.select(col("node").as("p_node"), col("nb").as("nbp"))
-    for (i <- 2 to steps) {
-      val wgt = (x: org.apache.spark.sql.Column) =>
-        when(x === col("prev"), lit(wReturn))
-          .when(array_contains(col("nbp"), x), lit(wNeighbor))
-          .otherwise(lit(wOut))
-      val h = pmod(col("walk_id") * lit(1000003L) + lit(10007L * i) +
-        col("node") * lit(101L) + col("prev") * lit(31L),
-        lit(1000000007L))
-      // weighted draw over the precomputed weight array: fold
-      // (remaining, pos, chosen 1-based POSITION); chosen stays 0
-      // until the cumulative weight passes r, then sticks
-      // (interpreted HOF — frontier-bounded). Two hard-won rules
-      // (both caught live at sf0.001 against the oracle): (1) the
-      // chosen value must be a POSITION, never a node id — ids here
-      // are signed (suppliers negated) and any id-valued sentinel
-      // collides with a real node; (2) the α-classes are computed in
-      // a separate `transform` projection ("wgts"), not inline in
-      // the fold — the class comparison against the outer prev/nbp
-      // columns mis-resolved inside aggregate's two-variable lambda
-      // (prev read as a non-match), while transform binds it
-      // correctly.
-      val pickPos = aggregate(col("wgts"),
-        struct((h % col("tot")).as("rem"), lit(0L).as("pos"),
-          lit(0L).as("chosen")),
-        (acc0, w) => struct(
-          (acc0.getField("rem") - w).as("rem"),
-          (acc0.getField("pos") + 1L).as("pos"),
-          when(acc0.getField("chosen") > 0L, acc0.getField("chosen"))
-            .when(w > acc0.getField("rem"),
-              acc0.getField("pos") + 1L)
-            .otherwise(lit(0L)).as("chosen")),
-        a => a.getField("chosen"))
-      val pick = element_at(col("nb"), pickPos.cast("int"))
-      // both adjacency fetches keep the frontier on the exchanged
-      // side: adj⋈frontier is frontier-sized, so the prev-side fetch
-      // moves that result against the pinned adjacency too —
-      // broadcast under the budget, shuffle past it (cutover above)
-      val stepped = if (bcast) adjS.join(broadcast(cur), "node")
-        else adjS.join(cur, "node")
-      cur = (if (bcast) prevAdj.join(broadcast(stepped),
-               col("p_node") === col("prev"))
-             else prevAdj.join(stepped, col("p_node") === col("prev")))
-        .withColumn("wgts", transform(col("nb"), x => wgt(x)))
-        .withColumn("tot",
-          aggregate(col("wgts"), lit(0L), (a, w) => a + w))
-        .select(col("walk_id"), col("node").as("prev"),
-          when(col("tot") > 0L, pick)
-            .otherwise(element_at(col("nb"),
-              (h % col("deg")).cast("int") + 1)).as("node"))
-        .localCheckpoint()
-      acc = acc.union(cur.select(col("walk_id"), lit(i).as("step"),
-        col("node")))
+    // The [[walks]] cutover with one harder ceiling (ADVICE r13): the
+    // prev-side fetch re-broadcasts rows that already CARRY the stepped
+    // node's neighbor array, so the second per-step broadcast payload
+    // is sum-of-degrees over the frontier, not |frontier| — budget
+    // against |walks|·(avgDeg·8 + overhead), and past it both fetches
+    // run against the keyed adjacency so only the frontier (and its
+    // array-carrying stepped form) exchanges, distributed over the
+    // shuffle instead of through the driver.
+    def rowBytes(adj: DataFrame): Long = {
+      // coalesce: sum(deg) is NULL on an empty adjacency (ADVICE r14) —
+      // the walk set is empty then too, but the budget read must not NPE
+      val degRow = adj.agg(coalesce(sum(col("deg")), lit(0L)),
+        count(lit(1))).head
+      val avgDeg = math.max(1L,
+        degRow.getLong(0) / math.max(1L, degRow.getLong(1)))
+      avgDeg * 8L + FrontierRowBytes
     }
-    acc
+    walks(edges, seeds, walksPerSeed, steps, broadcastBytes)(rowBytes) {
+      // step 1: first-order (no prev) — the randomWalks formula
+      case (walker, cur, 1) => walker.firstOrder(cur, 1, col("node").as("prev"))
+      case (walker, cur, i) =>
+        val wgt = (x: Column) =>
+          when(x === col("prev"), lit(wReturn))
+            .when(array_contains(col("nbp"), x), lit(wNeighbor))
+            .otherwise(lit(wOut))
+        val h = pmod(walkHash(i) + col("prev") * lit(31L), lit(1000000007L))
+        // weighted draw over the precomputed weight array: fold
+        // (remaining, pos, chosen 1-based POSITION); chosen stays 0
+        // until the cumulative weight passes r, then sticks
+        // (interpreted HOF — frontier-bounded). Two hard-won rules
+        // (both caught live at sf0.001 against the oracle): (1) the
+        // chosen value must be a POSITION, never a node id — ids here
+        // are signed (suppliers negated) and any id-valued sentinel
+        // collides with a real node; (2) the α-classes are computed in
+        // a separate `transform` projection ("wgts"), not inline in
+        // the fold — the class comparison against the outer prev/nbp
+        // columns mis-resolved inside aggregate's two-variable lambda
+        // (prev read as a non-match), while transform binds it
+        // correctly.
+        val pickPos = aggregate(col("wgts"),
+          struct((h % col("tot")).as("rem"), lit(0L).as("pos"),
+            lit(0L).as("chosen")),
+          (acc0, w) => struct(
+            (acc0.getField("rem") - w).as("rem"),
+            (acc0.getField("pos") + 1L).as("pos"),
+            when(acc0.getField("chosen") > 0L, acc0.getField("chosen"))
+              .when(w > acc0.getField("rem"),
+                acc0.getField("pos") + 1L)
+              .otherwise(lit(0L)).as("chosen")),
+          a => a.getField("chosen"))
+        val pick = element_at(col("nb"), pickPos.cast("int"))
+        // both adjacency fetches keep the frontier on the exchanged
+        // side: adj⋈frontier is frontier-sized, so the prev-side fetch
+        // moves that result against the adjacency too
+        val stepped = walker.adj.join(walker.side(cur), "node")
+        walker.adj.select(col("node").as("p_node"), col("nb").as("nbp"))
+          .join(walker.side(stepped), col("p_node") === col("prev"))
+          .withColumn("wgts", transform(col("nb"), x => wgt(x)))
+          .withColumn("tot",
+            aggregate(col("wgts"), lit(0L), (a, w) => a + w))
+          .select(col("walk_id"), col("node").as("prev"),
+            when(col("tot") > 0L, pick).otherwise(uniformHop(h)).as("node"))
+    }
   }
 
   /** HITS hubs-and-authorities (Neo4j GDS `alpha.hits`) with a FIXED

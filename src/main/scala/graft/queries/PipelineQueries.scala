@@ -228,7 +228,7 @@ object PipelineQueries extends QueryPack {
       val c = graft.streaming.Progress.attach(s)
       try {
         val name = s"graft_progress_${progressId.incrementAndGet()}"
-        withSqlConf(s, "spark.sql.shuffle.partitions" -> statefulWidth(s)) {
+        withSqlConf(s, "spark.sql.shuffle.partitions" -> StatefulWidth) {
           val q = CdcStream.eventCounts(CdcStream.readEvents(s, dir))
             .writeStream.format("memory").queryName(name)
             .outputMode(OutputMode.Complete())
@@ -802,7 +802,7 @@ object PipelineQueries extends QueryPack {
       // oracle pins it). Production keeps session defaults; the
       // bounded-delay eviction behavior stays spec'd in PipelineSpec.
       withSqlConf(s,
-          "spark.sql.shuffle.partitions" -> statefulWidth(s),
+          "spark.sql.shuffle.partitions" -> StatefulWidth,
           "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
         CdcStream.runToMemory(joined, OutputMode.Append())
       }.orderBy("click_id", "purchase_id")
@@ -833,7 +833,7 @@ object PipelineQueries extends QueryPack {
           col("l.user_id").as("user_id"),
           unix_micros(col("l.ts")).as("click_us"),
           unix_micros(col("r.ts")).as("purchase_us"))
-      withSqlConf(s, "spark.sql.shuffle.partitions" -> statefulWidth(s)) {
+      withSqlConf(s, "spark.sql.shuffle.partitions" -> StatefulWidth) {
         CdcStream.runToMemory(joined, OutputMode.Append())
       }.orderBy("click_id", "purchase_id")
     })
@@ -846,24 +846,18 @@ object PipelineQueries extends QueryPack {
     * (r11 profile: 32 partitions ⇒ 128 store commits per batch on
     * the join, an empty watermark-advance batch alone at 2.9 s), so
     * the width should track STATE VOLUME, not the host's core count
-    * — these runs carry ~10⁵ rows of state. Parameterized
-    * (`graft.stream.statefulPartitions` conf /
-    * `GRAFT_STREAM_STATEFUL_PARTITIONS` env) so a production
-    * deployment with real state volume sets its own width; the local
-    * default 8 is the r11-measured knee. Batch stages of the same
-    * entries keep the session width (the conf is scoped to the
-    * stream's start-to-termination window). */
-  private def statefulWidth(s: org.apache.spark.sql.SparkSession): String =
-    s.conf.getOption("graft.stream.statefulPartitions")
-      .orElse(sys.env.get("GRAFT_STREAM_STATEFUL_PARTITIONS"))
-      .getOrElse("8")
+    * — these runs carry ~10⁵ rows of state, and 8 is the
+    * r11-measured knee. Only these query-pack entries read it. Batch
+    * stages of the same entries keep the session width (the conf is
+    * scoped to the stream's start-to-termination window). */
+  private final val StatefulWidth = "8"
 
-  /** [[CdcStream.runToMemory]] under [[statefulWidth]] — the width is
+  /** [[CdcStream.runToMemory]] under [[StatefulWidth]] — the width is
     * captured at query start, so the conf wraps the start/await. */
   private def runRightSized(s: org.apache.spark.sql.SparkSession,
                             df: org.apache.spark.sql.DataFrame,
                             mode: OutputMode): org.apache.spark.sql.DataFrame =
-    withSqlConf(s, "spark.sql.shuffle.partitions" -> statefulWidth(s)) {
+    withSqlConf(s, "spark.sql.shuffle.partitions" -> StatefulWidth) {
       CdcStream.runToMemory(df, mode)
     }
 

@@ -440,6 +440,12 @@ class CoreQueriesSpec extends SparkSpec {
       .toDF("a", "b")
     val unw = operators.GraphOps.pageRankDirectedWithN(edges, iters = 3)._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // w ≡ 1: rank·1/W(u) is rank/out(u) in every bit, and both variants
+    // run the same rounds — exactly the same doubles
+    val ones = operators.GraphOps.pageRankWeightedWithN(
+        edges.withColumn("w", lit(1L)), iters = 3)._1
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(ones == unw, s"w=1 $ones vs unweighted $unw")
     val w1 = operators.GraphOps.pageRankWeightedWithN(
         edges.withColumn("w", lit(7L)), iters = 3)._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -22,23 +22,15 @@ class FixpointSpec extends SparkSpec {
     pairs.toDF("a", "b")
   }
 
-  /** Runs `body` with the coreness delta loop forced on (or off). */
-  private def corenessLoop[T](delta: Boolean)(body: => T): T =
-    if (!delta) body
-    else {
-      // -1 sends even an empty graph (0 edges) to the delta loop
-      spark.conf.set("graft.coreness.deltaEdges", "-1")
-      try body finally spark.conf.unset("graft.coreness.deltaEdges")
-    }
-
   /** The five fixpoint loops, by name, at a given `maxIters`. */
   private def loops(e: DataFrame, maxIters: Int): Seq[(String, () => DataFrame)] = Seq(
     "kCore" -> (() => GraphOps.kCore(e, k = 2, maxIters = maxIters)),
     "trussEdges" -> (() => GraphOps.trussEdges(e, k = 3, maxIters = maxIters)),
     "dedupClusters" -> (() => PipelineOps.dedupClusters(e, iCol = "a", jCol = "b",
       maxIters = maxIters)),
-    "coreness" -> (() => corenessLoop(delta = false)(GraphOps.coreness(e, maxIters))),
-    "coreness" -> (() => corenessLoop(delta = true)(GraphOps.coreness(e, maxIters))))
+    "coreness" -> (() => GraphOps.coreness(e, maxIters)),
+    // deltaEdges = -1 sends even an empty graph (0 edges) to the delta loop
+    "coreness" -> (() => GraphOps.coreness(e, maxIters, deltaEdges = -1L)))
 
   test("every fixpoint loop and pageRank return zero rows on an empty edge list") {
     val empty = edges()

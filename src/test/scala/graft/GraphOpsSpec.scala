@@ -442,39 +442,36 @@ class GraphOpsSpec extends SparkSpec {
       (9L, 10L), (10L, 11L), (11L, 12L))
     // maxIters = 11: the graph_coreness bound (10 oracle rounds + the
     // identity round that detects the fixpoint)
-    def run() = GraphOps.coreness(e, maxIters = 11)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = run() // |E| under the default 10M cutover → full loop
-    spark.conf.set("graft.coreness.deltaEdges", "0") // force delta loop
-    try {
-      val delta = run() // the maxIters bound exercised on BOTH paths
-      assert(delta == full, s"delta=$delta full=$full")
-      assert(full == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
-        5L -> 1L, 6L -> 1L, 7L -> 1L, 8L -> 1L, 9L -> 1L, 10L -> 1L,
-        11L -> 1L, 12L -> 1L), s"$full")
-    } finally spark.conf.unset("graft.coreness.deltaEdges")
+    def coreMap(df: DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // |E| under the default 10M cutover → full loop
+    val full = coreMap(GraphOps.coreness(e, maxIters = 11))
+    // force delta loop; the maxIters bound exercised on BOTH paths
+    val delta = coreMap(GraphOps.coreness(e, maxIters = 11, deltaEdges = 0L))
+    assert(delta == full, s"delta=$delta full=$full")
+    assert(full == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
+      5L -> 1L, 6L -> 1L, 7L -> 1L, 8L -> 1L, 9L -> 1L, 10L -> 1L,
+      11L -> 1L, 12L -> 1L), s"$full")
   }
 
   test("coreness: maxIters throws loudly past the bound, passes at it, on both loops") {
     // triangle + tail reaches its fixpoint in round 1; round 2 is the
     // identity round that detects it, so maxIters = 2 is the bound
     val e = edges((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).localCheckpoint()
-    def check(loop: String): Unit = {
-      val ok = GraphOps.coreness(e, maxIters = 2).collect()
+    def check(loop: String, deltaEdges: Long): Unit = {
+      val ok = GraphOps.coreness(e, maxIters = 2, deltaEdges).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(ok == Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 1L), s"$loop: $ok")
       // one round short: the named exception fires instead of a
       // silent oracle mismatch
       val ex = intercept[IllegalStateException] {
-        GraphOps.coreness(e, maxIters = 1).collect()
+        GraphOps.coreness(e, maxIters = 1, deltaEdges).collect()
       }
       assert(ex.getMessage.contains("coreness") &&
         ex.getMessage.contains("maxIters=1"), s"$loop: ${ex.getMessage}")
     }
-    check("full")
-    spark.conf.set("graft.coreness.deltaEdges", "0") // force delta loop
-    try check("delta")
-    finally spark.conf.unset("graft.coreness.deltaEdges")
+    check("full", deltaEdges = 10000000L)
+    check("delta", deltaEdges = 0L) // force delta loop
   }
 
   test("randomWalks: hand-checked hops, walk shape, determinism, edge validity") {
@@ -522,22 +519,20 @@ class GraphOpsSpec extends SparkSpec {
     val leaves = (0L until 10L).map(i => (i, 100L + i))
     val e = edges((ring ++ chords ++ leaves): _*)
     val seeds = (0L until 40L by 3).toDF("node")
-    def both(run: () => Array[(Long, Int, Long)]) = {
-      val bc = run()
-      spark.conf.set("graft.walk.broadcastBytes", "1")
-      try {
-        val sh = run()
-        (bc.sorted.toSeq, sh.sorted.toSeq)
-      } finally spark.conf.unset("graft.walk.broadcastBytes")
+    def both(run: Long => Array[(Long, Int, Long)]) = {
+      val bc = run(1L << 20)
+      val sh = run(1L)
+      (bc.sorted.toSeq, sh.sorted.toSeq)
     }
-    val (rwB, rwS) = both(() =>
-      GraphOps.randomWalks(e, seeds, walksPerSeed = 3, steps = 5)
+    val (rwB, rwS) = both(budget =>
+      GraphOps.randomWalks(e, seeds, walksPerSeed = 3, steps = 5,
+          broadcastBytes = budget)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))))
     assert(rwB.nonEmpty && rwB == rwS,
       s"randomWalks shuffle path diverged: ${rwB.size} vs ${rwS.size}")
-    val (nvB, nvS) = both(() =>
+    val (nvB, nvS) = both(budget =>
       GraphOps.node2vecWalks(e, seeds, walksPerSeed = 3, steps = 5,
-          wReturn = 1L, wNeighbor = 4L, wOut = 2L)
+          wReturn = 1L, wNeighbor = 4L, wOut = 2L, broadcastBytes = budget)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))))
     assert(nvB.nonEmpty && nvB == nvS,
       s"node2vecWalks shuffle path diverged: ${nvB.size} vs ${nvS.size}")

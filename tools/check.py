@@ -75,4 +75,9 @@ if json_out:
     with open(json_out, "w") as f:
         json.dump(record, f, indent=1, sort_keys=True)
 print(f"\n{fails} failures / {len(oracle)} oracle-checked")
+if not oracle:
+    # an empty dump (e.g. a SPARK_GRAFT_ONLY list that selected
+    # nothing) checked nothing — that is not a pass
+    print("FAIL: the dump holds no oracle-checked entry")
+    sys.exit(1)
 sys.exit(1 if fails else 0)
