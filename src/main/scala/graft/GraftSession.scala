@@ -33,7 +33,18 @@ object GraftSession {
     // full cache holds ~45 MB. Spark sizes this cache once per JVM,
     // from the first session that generates code: build every
     // session through create().
-    "spark.sql.codegen.cache.maxEntries" -> "2000")
+    "spark.sql.codegen.cache.maxEntries" -> "2000",
+    // per-session artifact isolation (a Spark Connect feature) stamps
+    // each job with its session's UUID, and every streaming query runs
+    // in a clone with a new UUID, so each query start gave the
+    // executor a new session state and class loader. The cache above
+    // is keyed by (class loader, code): every AvailableNow landing
+    // missed on code the cache already held, and a cdc_ingest pass
+    // recompiled 28 classes. Off, a repeated pass compiles 0 and its
+    // process CPU fell ~23%. graft never calls addArtifact; what this
+    // gives up is that artifacts added that way would be shared by
+    // every session of the JVM. Spark reads it once per session.
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Build a session: recommended conf + native SQL functions
     * registered. `shufflePartitions` should track cluster cores (it

@@ -22,6 +22,13 @@ import org.apache.spark.sql.streaming.StreamingQueryProgress
   * streaming analog of consumer lag: it bounds how stale the emitted
   * results can be. None when the query has no event-time watermark
   * (e.g. NoTimeout stateful ops) — such queries have no lag notion.
+  *
+  * `durationsMs` is Spark's per-trigger phase split, as reported:
+  * `latestOffset`, `queryPlanning`, `getBatch`, `walCommit`,
+  * `addBatch`, `commitOffsets` and `triggerExecution` (the whole
+  * trigger, = `batchDurationMs`). `addBatch` runs the batch into the
+  * sink; the rest of `triggerExecution` is the fixed per-batch cost
+  * around it: offsets, planning, and the offset and commit logs.
   */
 final case class BatchProgress(
     queryName: String,
@@ -32,6 +39,7 @@ final case class BatchProgress(
     inputRowsPerSecond: Double,
     processedRowsPerSecond: Double,
     batchDurationMs: Long,
+    durationsMs: Map[String, Long],
     watermark: Option[String],
     maxEventTime: Option[String],
     watermarkLagMs: Option[Long],
@@ -96,6 +104,7 @@ object ProgressCollector {
     val (stateRows, stateBytes) = p.stateOperators.foldLeft((0L, 0L)) {
       (acc, so) => (acc._1 + so.numRowsTotal, acc._2 + so.memoryUsedBytes)
     }
+    val durations = p.durationMs.asScala.map { case (k, v) => k -> v.longValue() }.toMap
     BatchProgress(
       queryName = Option(p.name).getOrElse(""),
       runId = p.runId.toString,
@@ -104,8 +113,8 @@ object ProgressCollector {
       numInputRows = p.numInputRows,
       inputRowsPerSecond = p.inputRowsPerSecond,
       processedRowsPerSecond = p.processedRowsPerSecond,
-      batchDurationMs =
-        Option(p.durationMs.get("triggerExecution")).map(_.longValue()).getOrElse(0L),
+      batchDurationMs = durations.getOrElse("triggerExecution", 0L),
+      durationsMs = durations,
       watermark = wm,
       maxEventTime = maxEt,
       watermarkLagMs = lag,

@@ -16,6 +16,10 @@ class ExtensionsSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       c("spark.sql.codegen.cache.maxEntries"),
       "the shared test session is built through GraftSession.create")
+    // every streaming query's clone session must share the executor's
+    // class loader, or each query start recompiles (see RecompileSpec)
+    assert(c("spark.sql.artifact.isolation.enabled") == "false")
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("dot_product is callable from SQL after register(spark)") {

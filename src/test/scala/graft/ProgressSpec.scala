@@ -53,6 +53,15 @@ class ProgressSpec extends SparkSpec {
       // the DataFrame surface supports engine-side health rollups
       val df = c.toDF(spark).filter(col("queryName") === "progressspec_state")
       assert(df.agg(sum("numInputRows")).first().getLong(0) >= 3L)
+      // Spark's per-trigger phase split rides along: the sink's share
+      // of a trigger is at most the whole trigger, batchDurationMs
+      val phases = df.filter(col("numInputRows") > 0)
+        .select(col("durationsMs")("addBatch"),
+          col("durationsMs")("triggerExecution"), col("batchDurationMs"))
+        .collect()
+      assert(phases.nonEmpty)
+      assert(phases.forall(r => !r.isNullAt(0) && r.getLong(0) <= r.getLong(1) &&
+        r.getLong(1) == r.getLong(2)), phases.mkString(", "))
     } finally Progress.detach(spark, c)
   }
 
