@@ -179,34 +179,26 @@ object IvfIndex {
     * fragmented subset is read with a static-pruning `cid` filter,
     * clustered `repartition(col("cid"))`, and written to one
     * dot-hidden staging tree PARTITIONED BY cid — each fragmented cid
-    * then publishes via the same per-cid crash-safe rename swap as
-    * before ([[graft.sinks.ParquetSink.deleteTimeRange]]'s
-    * boundary-month protocol: live → visible `_graft_replaced_cid=*`
-    * backup → staged in → backup deleted, recovered by the sweep at
-    * the top on the next call). Every untouched partition stays
+    * then publishes through [[graft.sinks.Publish]] with the backup at
+    * `_graft_replaced_cid=<c>`, and every call first recovers any cid a
+    * previous call left mid-publish. Every untouched partition stays
     * bit-for-bit identical, so the pass costs O(fragmented data) in
-    * one job plus O(fragmented partitions) renames. Same isolation
-    * contract as retention: crash-safe, not reader-atomic (an
-    * exclusive maintenance window, like MergeTree's OPTIMIZE).
-    * Returns the compacted cids. */
+    * one job plus O(fragmented partitions) renames. Crash-safe, not
+    * reader-atomic: an exclusive maintenance window, like MergeTree's
+    * OPTIMIZE. Returns the compacted cids. */
   def compact(spark: SparkSession, index: IvfIndex, maxFiles: Int = 8,
               maxRecordsPerFile: Long = 5000000L): Seq[Int] = {
     import org.apache.hadoop.fs.Path
+    import graft.sinks.Publish
     val root = new Path(s"${index.path}/assignments")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // globStatus returns NULL (not empty) when the base path itself is
-    // absent — a mistyped index path must fail with a message, not NPE
-    def glob(pattern: String) =
-      Option(fs.globStatus(new Path(root, pattern))).getOrElse(Array.empty)
     require(fs.exists(root), s"no assignments tree at $root — not an index?")
-    glob("_graft_replaced_cid=*").foreach { st =>
-      val c = st.getPath.getName.stripPrefix("_graft_replaced_cid=")
-      val live = new Path(root, s"cid=$c")
-      if (!fs.exists(live)) require(fs.rename(st.getPath, live),
-        s"failed to restore interrupted compaction of cid=$c")
-      else fs.delete(st.getPath, true)
+    fs.globStatus(new Path(root, "_graft_replaced_cid=*")).foreach { st =>
+      Publish.recover(fs,
+        new Path(root, st.getPath.getName.stripPrefix("_graft_replaced_")),
+        st.getPath)
     }
-    val fragmented = glob("cid=*").toSeq
+    val fragmented = fs.globStatus(new Path(root, "cid=*")).toSeq
       .filter(_.isDirectory)
       .flatMap { p =>
         val dataFiles = fs.listStatus(p.getPath).count { st =>
@@ -237,14 +229,8 @@ object IvfIndex {
       // staged twin must exist; publishing a missing dir would vanish
       // the partition
       require(fs.exists(staged), s"staged rewrite missing for cid=$c")
-      val live = new Path(root, s"cid=$c")
-      val backup = new Path(root, s"_graft_replaced_cid=$c")
-      fs.delete(backup, true)
-      require(fs.rename(live, backup),
-        s"failed to stage original partition cid=$c for replacement")
-      require(fs.rename(staged, live),
-        s"failed to publish compacted partition cid=$c")
-      fs.delete(backup, true)
+      Publish.replace(fs, new Path(root, s"cid=$c"), staged,
+        new Path(root, s"_graft_replaced_cid=$c"))
     }
     fs.delete(staging, true)
     fragmented

@@ -264,9 +264,15 @@ object Sketches {
     (p, p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration))
   }
 
-  /** Read a persisted filter's bytes; None if absent (first run). */
+  /** Where [[writeExactBloom]] keeps the previous filter mid-publish. */
+  private def bloomBackup(p: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(p.getParent, s"_graft_prev_${p.getName}")
+
+  /** Read a persisted filter's bytes; None if absent (first run). A
+    * filter a crash left mid-publish is recovered first. */
   def readExactBloom(df: DataFrame, path: String): Option[Array[Byte]] = {
     val (p, fs) = bloomFs(df, path)
+    graft.sinks.Publish.recover(fs, p, bloomBackup(p))
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -279,8 +285,10 @@ object Sketches {
     }
   }
 
-  /** Crash-safe staged-rename publish: a reader never sees a torn
-    * filter, and a crash mid-write leaves the previous filter live. */
+  /** Stage the filter at `.<name>.staging` and publish it through
+    * [[graft.sinks.Publish]] (backup `_graft_prev_<name>`): a reader
+    * never sees a torn filter, and a crash at any step leaves the old
+    * or the new filter recoverable. */
   private def writeExactBloom(df: DataFrame, path: String,
                               bytes: Array[Byte]): Unit = {
     val (p, fs) = bloomFs(df, path)
@@ -288,8 +296,7 @@ object Sketches {
       p.getParent, s".${p.getName}.staging")
     val out = fs.create(tmp, true)
     try out.write(bytes) finally out.close()
-    fs.delete(p, false)
-    require(fs.rename(tmp, p), s"failed to publish bloom filter at $path")
+    graft.sinks.Publish.replace(fs, p, tmp, bloomBackup(p))
   }
 
   /** Build and persist the filter over a history corpus. Size it for

@@ -148,40 +148,25 @@ object ParquetSink {
     * range overlaps — months fully inside the range are dropped as
     * directories (no read, like [[dropMonths]]); the at-most-two
     * boundary months are rewritten (read ONLY that month's directory,
-    * filter, write to a staging dir, swap via rename), and every other
+    * filter, stage the survivors, publish through [[Publish]] with the
+    * backup at `_graft_replaced_month=<m>`), and every other
     * partition's files are left bit-for-bit untouched. That bounds the
     * rewrite cost at two months of data regardless of table size — a
-    * delete-by-query over the whole table would be O(table).
+    * delete-by-query over the whole table would be O(table). A
+    * boundary month with no survivors is dropped like a fully covered
+    * one. Every call first recovers any month a previous run left
+    * mid-publish. Crash-safe, not reader-atomic (see [[Publish]]).
     * Timestamps are ISO strings interpreted in the session time zone.
-    * Returns (droppedMonths, rewrittenMonths).
-    *
-    * ISOLATION: crash-SAFE but not reader-ATOMIC. Like the reference's
-    * `ALTER TABLE ... DROP PARTITION`, retention assumes an exclusive
-    * writer and no concurrent readers of the affected months: between
-    * the two renames of a boundary-month swap the month is briefly
-    * absent, so a concurrent reader of the whole table can transiently
-    * miss that month's surviving rows (it never sees a HALF-written
-    * month — staging is dot-hidden — but can see a MISSING one).
-    * A crash in the window is repaired by the recovery sweep below;
-    * concurrent-reader snapshot isolation would need a manifest/table
-    * format (Iceberg/Delta) rather than a directory layout. */
+    * Returns (droppedMonths, rewrittenMonths). */
   def deleteTimeRange(spark: SparkSession, path: String, tsCol: String,
                       fromTs: String, untilTs: String)
       : (Seq[String], Seq[String]) = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recover any swap a previous run left half-done (see the rewrite
-    // protocol below): backup present + live dir missing means the
-    // crash hit between the two renames — restore the original so the
-    // month is visible again and this run re-processes it; backup
-    // present + live dir present means the publish succeeded and only
-    // the backup cleanup was lost — finish it.
     fs.globStatus(new Path(root, "_graft_replaced_month=*")).foreach { st =>
-      val m = st.getPath.getName.stripPrefix("_graft_replaced_month=")
-      val live = new Path(root, s"month=$m")
-      if (!fs.exists(live)) require(fs.rename(st.getPath, live),
-        s"failed to restore interrupted rewrite of month=$m")
-      else fs.delete(st.getPath, true)
+      Publish.recover(fs,
+        new Path(root, st.getPath.getName.stripPrefix("_graft_replaced_")),
+        st.getPath)
     }
     val from = java.time.LocalDateTime.parse(fromTs.replace(' ', 'T'))
     val until = java.time.LocalDateTime.parse(untilTs.replace(' ', 'T'))
@@ -198,12 +183,7 @@ object ParquetSink {
     full.foreach { case (m, _) => fs.delete(new Path(root, s"month=$m"), true) }
     val rewritten = boundary.map(_._1).filter { m =>
       val dir = new Path(root, s"month=$m")
-      // dot-prefixed staging is invisible to Spark's file listing, so
-      // no reader ever sees a HALF-written month (a reader racing the
-      // swap below can transiently miss the month entirely — see the
-      // ISOLATION note in the scaladoc)
       val tmp = new Path(root, s".graft_rewrite_month_$m")
-      fs.delete(tmp, true)
       // ONE data scan: write survivors to staging, then decide from
       // the staged output's row count — a zero-column count over the
       // staged parquet reads only row-group metadata, so checking
@@ -214,30 +194,14 @@ object ParquetSink {
       // a partition DROP, not a published empty directory.
       spark.read.parquet(dir.toString).filter(!inRange)
         .write.mode("overwrite").parquet(tmp.toString)
-      val keptRows = spark.read.parquet(tmp.toString).count()
-      // crash-safe swap: the live dir is RENAMED to a visible
-      // underscore-prefixed backup (Spark readers ignore it; humans
-      // and the recovery sweep above can find it), then the staged
-      // rewrite renamed in, then the backup deleted. At no instant do
-      // the surviving rows exist only in a hidden staging dir — a
-      // kill between any two steps is recovered by the sweep at the
-      // top of this method. rename reports failure via its return
-      // value, not an exception; losing a month partition silently is
-      // the one outcome retention must never have.
-      val backup = new Path(root, s"_graft_replaced_month=$m")
-      fs.delete(backup, true)
-      require(fs.rename(dir, backup),
-        s"failed to stage original partition month=$m for replacement")
-      if (keptRows > 0L) {
-        require(fs.rename(tmp, dir),
-          s"failed to publish rewritten partition month=$m from $tmp")
-        fs.delete(backup, true)
-        true
-      } else {
+      val kept = spark.read.parquet(tmp.toString).count() > 0L
+      if (kept) Publish.replace(fs, dir, tmp,
+        new Path(root, s"_graft_replaced_month=$m"))
+      else {
         fs.delete(tmp, true)
-        fs.delete(backup, true)
-        false
+        fs.delete(dir, true)
       }
+      kept
     }
     (full.map(_._1) ++ boundary.map(_._1).diff(rewritten), rewritten)
   }

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** SURVEY §2.H — Structured Streaming ingest, the Spark-native form of
@@ -71,6 +71,26 @@ object CdcStream {
                        ts: java.sql.Timestamp)
 
   private val sinkId = new AtomicInteger(0)
+
+  /** The foreachBatch landing shape: `land` runs once per micro-batch
+    * under `mode`, with progress kept at `checkpointDir`. */
+  private def eachBatch(df: DataFrame, mode: OutputMode,
+                        checkpointDir: String)(land: DataFrame => Unit)
+      : DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], _: Long) => land(batch.toDF()) }
+
+  /** Run `w` to completion under AvailableNow. A named query is
+    * attributable in ProgressCollector rollups (a session can run many
+    * landings; unnamed rows all share ""). */
+  private def runAvailableNow(w: DataStreamWriter[Row],
+                              queryName: Option[String]): Unit =
+    queryName.fold(w)(w.queryName)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 
   /** File-source stream of events (same rows the batch path loads).
     * The file source requires a directory; the testdata lays tables
@@ -299,19 +319,9 @@ object CdcStream {
                     save: (DataFrame, Map[String, String]) => Unit =
                       (b, o) => graft.sinks.JdbcSink.writer(b, o).save(),
                     queryName: Option[String] = None)
-      : Unit = {
-    val w = df.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        save(batch.toDF(), jdbcOpts)
-      }
-      .trigger(Trigger.AvailableNow())
-    // a named query is attributable in ProgressCollector rollups (a
-    // session can run many landings; unnamed rows all share "")
-    val q = queryName.fold(w)(w.queryName).start()
-    q.awaitTermination()
-  }
+      : Unit =
+    runAvailableNow(eachBatch(df, OutputMode.Update(), checkpointDir)(
+      save(_, jdbcOpts)), queryName)
 
   /** Streaming exact dedup — the D1 content-hash dedup as a stream
     * operator, with BOUNDED state: `dropDuplicatesWithinWatermark`
@@ -349,7 +359,7 @@ object CdcStream {
     *      cannot drop a clean document — output is EXACTLY deduped.
     *      Pass None to skip the join and accept ε loss (cheapest);
     *   4. `save` the survivors, then merge their fingerprints into the
-    *      filter (staged-rename publish).
+    *      filter (published through [[graft.sinks.Publish]]).
     *
     * Save-before-merge ⇒ a crash between the two replays the batch
     * against the PRE-batch filter: survivors re-land (at-least-once,
@@ -362,37 +372,30 @@ object CdcStream {
                           save: DataFrame => Unit,
                           verifyAgainst: Option[() => DataFrame] = None,
                           fpp: Double = 0.01,
-                          queryName: Option[String] = None): Unit = {
-    val w = df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val local = batch.toDF().dropDuplicates(textCol)
-        val flag = "__maybe_dup"
-        val screened = graft.operators.Sketches
-          .screenExactBloom(local, textCol, bloomPath, flag)
-        val fresh = screened.filter(!col(flag)).drop(flag)
-        val survivors = verifyAgainst match {
-          case Some(hist) =>
-            fresh.unionByName(
-              screened.filter(col(flag)).drop(flag)
-                .join(hist().select(textCol).distinct(),
-                  Seq(textCol), "left_anti"))
-          case None => fresh
-        }
-        // two consumers (save + fingerprint merge); without the pin
-        // the screen/verify plan runs twice
-        val pinned = survivors.persist()
-        try {
-          save(pinned)
-          graft.operators.Sketches
-            .mergeExactBloom(pinned, textCol, bloomPath, capacityItems, fpp)
-        } finally pinned.unpersist()
+                          queryName: Option[String] = None): Unit =
+    runAvailableNow(eachBatch(df, OutputMode.Append(), checkpointDir) { batch =>
+      val local = batch.dropDuplicates(textCol)
+      val flag = "__maybe_dup"
+      val screened = graft.operators.Sketches
+        .screenExactBloom(local, textCol, bloomPath, flag)
+      val fresh = screened.filter(!col(flag)).drop(flag)
+      val survivors = verifyAgainst match {
+        case Some(hist) =>
+          fresh.unionByName(
+            screened.filter(col(flag)).drop(flag)
+              .join(hist().select(textCol).distinct(),
+                Seq(textCol), "left_anti"))
+        case None => fresh
       }
-      .trigger(Trigger.AvailableNow())
-    val q = queryName.fold(w)(w.queryName).start()
-    q.awaitTermination()
-  }
+      // two consumers (save + fingerprint merge); without the pin
+      // the screen/verify plan runs twice
+      val pinned = survivors.persist()
+      try {
+        save(pinned)
+        graft.operators.Sketches
+          .mergeExactBloom(pinned, textCol, bloomPath, capacityItems, fpp)
+      } finally pinned.unpersist()
+    }, queryName)
 
   /** Streaming uniqState materialized view — the reference's
     * AggregatingMergeTree MV fed from Kafka (`uniqState` per key,
@@ -413,12 +416,10 @@ object CdcStream {
     * row counters — reconciliation-grade, absorbed by downstream
     * validation — or compare it only on clean runs.
     *
-    * Publish is the repo's crash-safe swap (ParquetSink.deleteTimeRange
-    * protocol): staged write (dot-hidden) → live renamed to a VISIBLE
-    * backup → stage renamed live → backup deleted, with a recovery
-    * sweep at every batch start, so a kill between any two steps never
-    * loses the accumulated state. Mismatched lgK between the landed
-    * state and `lgK` fails loud in the merge (hll_union_agg). */
+    * Each batch publishes through [[landStateEachBatch]]'s
+    * [[graft.sinks.Publish]] swap, so a kill mid-publish never loses
+    * the accumulated state. Mismatched lgK between the landed state and
+    * `lgK` fails loud in the merge (hll_union_agg). */
   def uniqStateLand(df: DataFrame, keyCols: Seq[String], valueCol: String,
                     statePath: String, checkpointDir: String,
                     lgK: Int = 12, queryName: Option[String] = None): Unit =
@@ -454,10 +455,9 @@ object CdcStream {
     * reduces the batch to state rows, which `mergeStates` folds into
     * the persisted state table (read-merge-replace; the two callbacks
     * are the `-State` / `-Merge` combinator pair, so ANY member of the
-    * Sketches suite lands through this one topology). Publish is the
-    * repo's crash-safe swap (staged write → live renamed to a VISIBLE
-    * backup → stage renamed live → backup deleted) with a recovery
-    * sweep at every batch start — a kill between any two steps never
+    * Sketches suite lands through this one topology). The merged state
+    * is staged and swapped in through [[graft.sinks.Publish]], whose
+    * recovery runs at every batch start — a kill mid-publish never
     * loses the accumulated state. */
   def landStateEachBatch(df: DataFrame, statePath: String,
                          checkpointDir: String,
@@ -465,39 +465,22 @@ object CdcStream {
                          mergeStates: DataFrame => DataFrame,
                          queryName: Option[String] = None): Unit = {
     import org.apache.hadoop.fs.Path
-    val w = df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val live = new Path(statePath, "state")
-        val backup = new Path(statePath, "_graft_prev_state")
-        val stage = new Path(statePath, ".graft_state_stage")
-        val fs = live.getFileSystem(s.sparkContext.hadoopConfiguration)
-        // recovery sweep: backup + no live = crash between the two
-        // renames — restore; backup + live = publish done, cleanup lost
-        if (fs.exists(backup)) {
-          if (!fs.exists(live)) require(fs.rename(backup, live),
-            s"failed to restore interrupted state publish at $statePath")
-          else fs.delete(backup, true)
-        }
-        val bState = buildState(batch.toDF())
-        val merged =
-          if (fs.exists(live))
-            mergeStates(bState.unionByName(s.read.parquet(live.toString)))
-          else bState
-        fs.delete(stage, true)
-        merged.write.mode("overwrite").parquet(stage.toString)
-        if (fs.exists(live)) require(fs.rename(live, backup),
-          s"failed to stage previous state at $statePath")
-        require(fs.rename(stage, live),
-          s"failed to publish state at $statePath")
-        fs.delete(backup, true)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = queryName.fold(w)(w.queryName).start()
-    q.awaitTermination()
+    import graft.sinks.Publish
+    val live = new Path(statePath, "state")
+    val backup = new Path(statePath, "_graft_prev_state")
+    val stage = new Path(statePath, ".graft_state_stage")
+    runAvailableNow(eachBatch(df, OutputMode.Append(), checkpointDir) { batch =>
+      val s = batch.sparkSession
+      val fs = live.getFileSystem(s.sparkContext.hadoopConfiguration)
+      Publish.recover(fs, live, backup)
+      val bState = buildState(batch)
+      val merged =
+        if (fs.exists(live))
+          mergeStates(bState.unionByName(s.read.parquet(live.toString)))
+        else bState
+      merged.write.mode("overwrite").parquet(stage.toString)
+      Publish.replace(fs, live, stage, backup)
+    }, queryName)
   }
 
   /** Land a stream into the monthly-partitioned parquet layout — the
@@ -513,18 +496,10 @@ object CdcStream {
   def landMonthly(df: DataFrame, tsCol: String, path: String,
                   checkpointDir: String,
                   maxRecordsPerFile: Long = 5000000L,
-                  queryName: Option[String] = None): Unit = {
-    val w = df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sinks.ParquetSink.writeMonthly(batch.toDF(), tsCol, path,
-          mode = "append", maxRecordsPerFile = maxRecordsPerFile)
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = queryName.fold(w)(w.queryName).start()
-    q.awaitTermination()
-  }
+                  queryName: Option[String] = None): Unit =
+    runAvailableNow(eachBatch(df, OutputMode.Append(), checkpointDir)(
+      graft.sinks.ParquetSink.writeMonthly(_, tsCol, path,
+        mode = "append", maxRecordsPerFile = maxRecordsPerFile)), queryName)
 
   /** H2: incremental ReplacingMergeTree FINAL — newest event per
     * entity held in `GroupState`, re-emitted on update. State is one
@@ -750,14 +725,11 @@ object CdcStream {
     * production landing is the foreachBatch upsert that
     * stream_jdbc_land exercises end-to-end. */
   def runToParquet(df: DataFrame, stage: String): DataFrame = {
-    val q = df.writeStream
+    runAvailableNow(df.writeStream
       .format("parquet")
       .option("path", s"$stage/out")
       .option("checkpointLocation", s"$stage/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode(OutputMode.Append()), None)
     df.sparkSession.read.parquet(s"$stage/out")
   }
 
@@ -765,13 +737,8 @@ object CdcStream {
     * memory sink and return the materialized table. */
   def runToMemory(df: DataFrame, outputMode: OutputMode): DataFrame = {
     val name = s"graft_stream_${sinkId.incrementAndGet()}"
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(df.writeStream.format("memory").outputMode(outputMode),
+      Some(name))
     df.sparkSession.table(name)
   }
 }
