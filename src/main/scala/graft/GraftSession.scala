@@ -1,5 +1,8 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated session builder: the configuration graft's operators
@@ -44,7 +47,15 @@ object GraftSession {
     // process CPU fell ~23%. graft never calls addArtifact; what this
     // gives up is that artifacts added that way would be shared by
     // every session of the JVM. Spark reads it once per session.
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // without its native library, Hadoop's local file system starts a
+    // `chmod` process per permission set and a `readlink` per link
+    // status read, ~35 per streaming micro-batch at ~5 ms each; graft's
+    // makes both calls in-process (GraftLocalFileSystem.scala). create()
+    // warns when a `file:` FileSystem cached earlier in the JVM keeps
+    // Hadoop's class (the cache is keyed by scheme and user, not conf).
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[GraftLocalFs].getName)
 
   /** Build a session: recommended conf + native SQL functions
     * registered. `shufflePartitions` should track cluster cores (it
@@ -61,6 +72,15 @@ object GraftSession {
     // getOrCreate may have returned a pre-existing session (where
     // withExtensions does not apply) — registration is idempotent
     GraftExtensions.register(spark)
+    val local = FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    if (!local.isInstanceOf[GraftLocalFileSystem])
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"file: FileSystem is ${local.getClass.getName}, not graft's " +
+          s"${classOf[GraftLocalFileSystem].getName}: a file: FileSystem was " +
+          "cached before the first GraftSession (Hadoop caches FileSystems by " +
+          "scheme and user, not by conf), or the SparkContext was built " +
+          "without recommendedConf. Without Hadoop's native library each " +
+          "checkpoint and parquet write then starts chmod/readlink processes.")
     spark
   }
 }

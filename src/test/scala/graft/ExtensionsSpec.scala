@@ -20,6 +20,11 @@ class ExtensionsSpec extends SparkSpec {
     // class loader, or each query start recompiles (see RecompileSpec)
     assert(c("spark.sql.artifact.isolation.enabled") == "false")
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    // checkpoint and parquet writes must not start chmod/readlink
+    // processes (see SpawnSpec)
+    assert(c("spark.hadoop.fs.file.impl") == classOf[GraftLocalFileSystem].getName)
+    assert(c("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[GraftLocalFs].getName)
   }
 
   test("dot_product is callable from SQL after register(spark)") {

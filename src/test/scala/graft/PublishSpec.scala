@@ -1,5 +1,6 @@
 package graft
 
+import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
@@ -13,9 +14,12 @@ import graft.sinks.Publish
 /** The local file system, except that its `crashAt`-th mutating call
   * (`rename`, `delete`, `create`, `mkdirs`) throws before it acts —
   * a process killed at that step. `crashAt` = 0 never crashes and only
-  * counts. */
+  * counts. A new instance, not the cached one: Hadoop caches
+  * FileSystems by scheme and user, not by conf, so a cached `file:`
+  * FileSystem would hand Hadoop's class to a later graft session. */
 class CrashingFs(crashAt: Int)
-    extends FilterFileSystem(FileSystem.getLocal(new Configuration())) {
+    extends FilterFileSystem(
+      FileSystem.newInstance(URI.create("file:///"), new Configuration())) {
   var calls = 0
   private def inner = getRawFileSystem
   private def step(): Unit = {
