@@ -84,11 +84,7 @@ object Bench {
     // (releasing per entry would forfeit the reuse AND distort the
     // timings); the pass owns the cache, so it releases once, here.
     spark.catalog.clearCache()
-    def jq(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+    import Verify.{jsonString => jq}
     val qs = results.map { case (k, ts) => s"${jq(k)}:${ts.min}" }.mkString("{", ",", "}")
     // load-contamination self-diagnosis (VERDICT r3: a loaded machine
     // produced a phantom 4x regression only a judge re-run could

@@ -3,6 +3,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `s` as a JSON string literal: backslash, quote and every control
+    * char (<0x20) escaped. A tab or CR in an entry's oracle SQL or an
+    * error message would otherwise make a reader's json.load fail.
+    * Bench and graft.Harness write their JSON through it too. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // SPARK_GRAFT_ONLY=a,b,c — dump only the named queries (unset:
@@ -29,21 +43,9 @@ object Verify {
     // would forfeit that). The pass is the owner, so it releases
     // everything once, here — zero residual cached relations.
     spark.catalog.clearCache()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Declared rows-only entries (VERDICT r7 #8): queries with no
     // oracle SQL are BY-DESIGN rows-only — each is a raw sketch/sample
@@ -66,7 +68,7 @@ object Verify {
       "sim_ivfpq" -> "sim_ivfpq_check",
       "sample_rand" -> "sample_rand_check")
     val roJson = rowsOnly.toSeq.sorted.map { k =>
-      s"${q(k)}: {${q("rows_only")}: true, ${q("oracle_twin")}: ${q(twins.getOrElse(k, ""))}}"
+      s"${jsonString(k)}: {${jsonString("rows_only")}: true, ${jsonString("oracle_twin")}: ${jsonString(twins.getOrElse(k, ""))}}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/rows_only.json"), roJson)
     spark.stop()

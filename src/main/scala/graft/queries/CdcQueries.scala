@@ -323,8 +323,8 @@ object CdcQueries extends QueryPack {
     // reads it back through the transport, emits SNAPSHOT records,
     // and must hash-match the original table. NOTE: unlike the other
     // entries these builders run eager side-effecting IO (staging
-    // writes / a JDBC table overwrite) — keep them out of plan-only
-    // tooling like Plans.scala's headline list.
+    // writes / a JDBC table overwrite) — rendering their plans
+    // (graft.Harness plans) runs that IO too, as Verify does.
     "snapshot_csv" -> ((s, dir) => {
       val src = snapshotSource(s, dir)
       val staging = stagingPath("csv", dir)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftprobe.ListenerDrain
 
 import graft.operators.{IvfIndex, Similarity}
 
@@ -191,8 +192,8 @@ class IvfIndexSpec extends SparkSpec {
     val compacted =
       try {
         val c = IvfIndex.compact(spark, idx, maxFiles = 1)
-        // listener delivery is async — settle before reading the count
-        Thread.sleep(1000)
+        // listener delivery is async — drain before reading the count
+        ListenerDrain(spark)
         c
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(compacted.size >= 3,
