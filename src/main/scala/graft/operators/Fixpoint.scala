@@ -5,9 +5,11 @@ import scala.annotation.tailrec
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-/** The one convergence loop of graft's fixpoint operators
-  * ([[GraphOps.kCore]], [[GraphOps.coreness]], [[GraphOps.trussEdges]],
-  * [[PipelineOps.dedupClusters]]).
+/** The round runners of graft's iterative DataFrame operators: the
+  * convergence loop of the fixpoint operators ([[GraphOps.kCore]],
+  * [[GraphOps.coreness]], [[GraphOps.trussEdges]],
+  * [[PipelineOps.dedupClusters]]) and [[rounds]], the fixed-round
+  * runner of the other `GraphOps` loops over DataFrame state.
   *
   * Each round's output is checkpointed (lineage truncation, the
   * iterative-plan discipline) and its convergence statistic — a row
@@ -19,6 +21,21 @@ import org.apache.spark.sql.functions._
   * `maxIters`: an unconverged peel or label result is silently wrong
   * (a superset core, split clusters, overstated coreness), so no
   * partial result is ever returned.
+  *
+  * [[rounds]] runs a FIXED number of rounds (the oracle replays the
+  * same count) and hands each round every state so far, so one runner
+  * serves the fixed-round loops (which keep the last state), the
+  * accumulating ones (FastRP's weighted sum, the walk trace, the
+  * sampled hops, built from the returned states) and the frontier
+  * loops (whose settled set is the lazy union of the earlier
+  * frontiers). Three loops stay off it:
+  *   - [[GraphOps.pageRankWithN]] keeps lazy lineage by design: all
+  *     of its rounds run in the caller's one job;
+  *   - [[GraphOps.bfsDistances]] persists its levels lazily, and a
+  *     checkpoint per level would add `maxHops` jobs;
+  *   - `Similarity`'s `fitCentroids`, `pcaPowerExact` and
+  *     `kmeansExact` carry their round state in a driver-side array,
+  *     not a DataFrame.
   */
 object Fixpoint {
 
@@ -48,6 +65,15 @@ object Fixpoint {
   def untilZero[S](op: String, maxIters: Int, init: S)(
       round: S => (S, Long)): S =
     loop(op, maxIters, init, 0L)((_, now) => now == 0L)(round)
+
+  /** Run `round` for t = 1..n from x₀ = `init` (used as given, so a
+    * lazy init stays lazy). Round t sees x₀ … x_{t−1} and returns xₜ
+    * lazily; the runner checkpoints it (one eager `localCheckpoint`,
+    * so no earlier round's plan stays in its lineage). Returns
+    * x₀ … xₙ. */
+  def rounds(n: Int, init: DataFrame)(
+      round: (IndexedSeq[DataFrame], Int) => DataFrame): IndexedSeq[DataFrame] =
+    (1 to n).foldLeft(Vector(init))((xs, t) => xs :+ round(xs, t).localCheckpoint())
 
   private def loop[S](op: String, maxIters: Int, init: S, stat: Long)(
       done: (Long, Long) => Boolean)(round: S => (S, Long)): S = {

@@ -17,10 +17,11 @@ import scala.util.DynamicVariable
   * All algorithms here are ITERATIVE JOIN PIPELINES over a
   * symmetrized edge list: per iteration one join shuffle keyed on the
   * source node + one hash-agg shuffle keyed on the target — the same
-  * 2-shuffles-per-round shape as [[PipelineOps.dedupClusters]], which
-  * is the proven-at-scale loop in this repo (checkpoint-truncated
-  * lineage there; here iteration counts are small constants so plain
-  * lineage is fine — callers running >10 rounds should checkpoint).
+  * 2-shuffles-per-round shape as [[PipelineOps.dedupClusters]]. Every
+  * loop over DataFrame state runs its rounds through [[Fixpoint]]
+  * (the convergence loops, and [[Fixpoint.rounds]] for the fixed-round
+  * and hop-bounded ones), which checkpoints each round's state; the
+  * exceptions and their reasons are in its scaladoc.
   * The edge list is persisted ONCE (it joins in every round; without
   * pinning, each round re-runs the upstream edge derivation — the
   * repo-wide caching stance, docs/SCALE.md).
@@ -45,10 +46,10 @@ import scala.util.DynamicVariable
   * materialized). A build on another thread has its own scope. LOOP-SCOPED
   * STATE (each round's ranks/labels/frontier, and the HITS vectors
   * whose lazy tree otherwise doubles per half-step) is
-  * `localCheckpoint`ed — lineage truncation is what iterative plans
-  * need, and the ContextCleaner reclaims each round's checkpoint as
-  * soon as the next round drops the reference, so live checkpoint
-  * state is bounded by one round at any iteration count.
+  * `localCheckpoint`ed by the round runner — lineage truncation is
+  * what iterative plans need. The runner hands every round the states
+  * before it, so they stay referenced until the operator's build
+  * returns; the ContextCleaner reclaims them once it drops them.
   */
 object GraphOps {
 
@@ -193,7 +194,8 @@ object GraphOps {
     val und = undirected(edges)
       .repartition(col("a")).sortWithinPartitions("a")
       .transform(pin)
-    var settled = seeds.toDF("node").withColumn("dist", lit(0))
+    // dedupe driver-side: a duplicated seed would be reported twice
+    var settled = seeds.distinct.toDF("node").withColumn("dist", lit(0))
       .transform(pin)
     var frontier = settled
     for (h <- 1 to maxHops) {
@@ -430,7 +432,7 @@ object GraphOps {
       .transform(pin)
     // dedupe driver-side: a duplicated seed would double its sigma at
     // layer 0 and silently double-count its dependency contributions
-    var frontier = seeds.distinct.toDF("node")
+    val layer0 = seeds.distinct.toDF("node")
       .select(col("node").as("src"), col("node"), lit(1L).as("sigma"))
       .localCheckpoint()
     // settled stays a LAZY union of the checkpointed frontiers (r16):
@@ -438,36 +440,32 @@ object GraphOps {
     // the whole k·|V| settled set every layer (one extra eager job +
     // O(|settled|) rewritten rows per layer) for an anti-join that
     // reads the same rows either way
-    var settled = frontier.select("src", "node")
-    val layers = scala.collection.mutable.ArrayBuffer[DataFrame](frontier)
-    for (_ <- 1 to maxHops) {
-      frontier = und.join(frontier, col("a") === col("node"))
+    val layers = Fixpoint.rounds(maxHops, layer0) { (prev, _) =>
+      val settled = prev.map(_.select("src", "node")).reduce(_ union _)
+      und.join(prev.last, col("a") === col("node"))
         .select(col("src"), col("b"), col("sigma"))
         .join(settled.select(col("src"), col("node").as("b")),
           Seq("src", "b"), "left_anti")
         .groupBy(col("src"), col("b").as("node"))
         .agg(sum(col("sigma")).as("sigma"))
-        .localCheckpoint()
-      layers += frontier
-      settled = settled.union(frontier.select("src", "node"))
     }
-    var dep = layers(maxHops)
+    // backward: round t folds layer maxHops − t onto the dependencies
+    // of the layer below it
+    val depInit = layers(maxHops)
       .select(col("src"), col("node"), col("sigma"), lit(0.0).as("delta"))
       .localCheckpoint()
-    val deps = scala.collection.mutable.ArrayBuffer[DataFrame](dep)
-    for (l <- maxHops - 1 to 0 by -1) {
-      val contrib = layers(l).as("v")
+    val deps = Fixpoint.rounds(maxHops, depInit) { (prev, t) =>
+      val layer = layers(maxHops - t)
+      val contrib = layer.as("v")
         .join(und, col("v.node") === col("a"))
-        .join(dep.as("w"),
+        .join(prev.last.as("w"),
           col("b") === col("w.node") && col("v.src") === col("w.src"))
         .groupBy(col("v.src").as("src"), col("v.node").as("node"))
         .agg(sum(col("v.sigma").cast("double") / col("w.sigma")
           * (lit(1.0) + col("w.delta"))).as("c"))
-      dep = layers(l).join(contrib, Seq("src", "node"), "left")
+      layer.join(contrib, Seq("src", "node"), "left")
         .select(col("src"), col("node"), col("sigma"),
           coalesce(col("c"), lit(0.0)).as("delta"))
-        .localCheckpoint()
-      deps += dep
     }
     val bc = deps.reduce(_ union _)
       .filter(col("node") =!= col("src"))
@@ -517,23 +515,20 @@ object GraphOps {
       .transform(pin)
     // dedupe driver-side: a duplicated seed would double-count every
     // one of its 1/d closeness contributions
-    var frontier = seeds.distinct.toDF("node")
+    val layer0 = seeds.distinct.toDF("node")
       .select(col("node").as("src"), col("node"))
       .localCheckpoint()
-    var settled = frontier
-    var acc: DataFrame = null // per-node integer lcm/d contributions
-    for (h <- 1 to maxHops) {
-      frontier = und.join(frontier, col("a") === col("node"))
+    val layers = Fixpoint.rounds(maxHops, layer0) { (prev, _) =>
+      und.join(prev.last, col("a") === col("node"))
         .select(col("src"), col("b")).distinct()
-        .join(settled.select(col("src"), col("node").as("b")),
+        .join(prev.reduce(_ union _).select(col("src"), col("node").as("b")),
           Seq("src", "b"), "left_anti")
         .select(col("src"), col("b").as("node"))
-        .localCheckpoint()
-      settled = settled.union(frontier)
-      val level = frontier.groupBy("node")
-        .agg((count(lit(1)) * lit(lcm / h)).as("num"))
-      acc = if (acc == null) level else acc.union(level)
     }
+    // per-node integer lcm/d contributions of each level d
+    val acc = (1 to maxHops).map(h => layers(h).groupBy("node")
+        .agg((count(lit(1)) * lit(lcm / h)).as("num")))
+      .reduce(_ union _)
     val sums = acc.groupBy("node").agg(sum(col("num")).as("num"))
     nodes.join(sums, Seq("node"), "left")
       .select(col("node"),
@@ -732,19 +727,17 @@ object GraphOps {
     val undA = undirected(edges)
       .repartition(col("a")).sortWithinPartitions("a")
       .transform(pin)
-    var labels = undA.select(col("a").as("node")).distinct()
+    val init = undA.select(col("a").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      labels = undA.join(labels, col("a") === col("node"))
+    Fixpoint.rounds(rounds, init) { (prev, _) =>
+      undA.join(prev.last, col("a") === col("node"))
         .groupBy(col("b"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("b").as("node"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
           .as("best"))
         .select(col("node"), col("best.l").as("label"))
-        .localCheckpoint()
-    }
-    labels
+    }.last
   }
 
   /** One level of Louvain community detection (Neo4j GDS `louvain`,
@@ -851,9 +844,10 @@ object GraphOps {
     * mass. Output: (node, community). */
   private def louvainMoves(deg: DataFrame, m: Long, rounds: Int,
       kicAgg: Column)(gather: (DataFrame, Int) => DataFrame): DataFrame = {
-    var assign = deg.select(col("node"), col("node").as("community"),
+    val init = deg.select(col("node"), col("node").as("community"),
       col("deg")).localCheckpoint()
-    for (t <- 1 to rounds) {
+    Fixpoint.rounds(rounds, init) { (prev, t) =>
+      val assign = prev.last
       val tot = assign
         .groupBy("community").agg(sum(col("deg")).as("tot"))
       // r16 (guide §2.4): key the gathered rows on `a` ALONE before
@@ -880,13 +874,11 @@ object GraphOps {
         .select(col("node"), col("best.c").as("next"))
       // movers adopt their argmax (every mover has ≥1 candidate, so
       // `next` exists for all of them); holders ride the left join
-      assign = assign.join(best, Seq("node"), "left")
+      assign.join(best, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("next"), col("community")).as("community"),
           col("deg"))
-        .localCheckpoint()
-    }
-    assign.select(col("node"), col("community"))
+    }.last.select(col("node"), col("community"))
   }
 
   /** One WEIGHTED Louvain local-moving level over a symmetric weighted
@@ -1039,6 +1031,7 @@ object GraphOps {
              iterWeights: Seq[Double] = Seq(0.0, 1.0, 1.0)): DataFrame = {
     require(dims >= 1, s"fastRP: dims must be >= 1, got $dims")
     require(iterWeights.nonEmpty, "fastRP: iterWeights must be non-empty")
+    require(iterWeights.exists(_ != 0.0), "fastRP: all iteration weights are zero")
     // deg(a) rides each edge row so the per-round mean divides
     // without a second |V| join; pinned on the round's join key b
     val und = undirected(edges)
@@ -1048,30 +1041,38 @@ object GraphOps {
       .join(deg.select(col("node").as("a"), col("deg")), "a")
       .repartition(col("b")).sortWithinPartitions("b")
       .transform(pin)
-    var x = deg.select(col("node"),
+    val x0 = projectionSigns(deg, dims)
+      .select(col("node"), col("dim"), col("sign").cast("double").as("val"))
+      .localCheckpoint()
+    val xs = Fixpoint.rounds(iterWeights.size, x0) { (prev, _) =>
+      undDeg.join(prev.last, col("b") === col("node"))
+        .groupBy(col("a").as("node"), col("dim"))
+        .agg((sum(col("val")) / max(col("deg"))).as("val"))
+    }
+    weightedTerms(xs, iterWeights, col("val"))
+      .groupBy("node", "dim").agg(sum(col("val")).as("val"))
+  }
+
+  /** The initial FastRP projection of every `node` of `nodes`: entry
+    * (node, dim) draws its Achlioptas s=3 sign in {+1, −1, 0} from the
+    * integer hash both engines replay. Output: (node, dim, sign). */
+  private def projectionSigns(nodes: DataFrame, dims: Int): DataFrame =
+    nodes.select(col("node"),
         explode(sequence(lit(0L), lit(dims - 1L))).as("dim"))
       .withColumn("h",
         pmod(col("node") * lit(31L) + col("dim") * lit(1000003L) + lit(777L),
           lit(1000000007L)) % 6)
       .select(col("node"), col("dim"),
-        when(col("h") === 0, lit(1.0)).when(col("h") === 1, lit(-1.0))
-          .otherwise(lit(0.0)).as("val"))
-      .localCheckpoint()
-    var acc: DataFrame = null
-    for (w <- iterWeights) {
-      x = undDeg.join(x, col("b") === col("node"))
-        .groupBy(col("a").as("node"), col("dim"))
-        .agg((sum(col("val")) / max(col("deg"))).as("val"))
-        .localCheckpoint()
-      if (w != 0.0) {
-        val term = x.select(col("node"), col("dim"),
-          (col("val") * lit(w)).as("val"))
-        acc = if (acc == null) term else acc.union(term)
-      }
-    }
-    require(acc != null, "fastRP: all iteration weights are zero")
-    acc.groupBy("node", "dim").agg(sum(col("val")).as("val"))
-  }
+        when(col("h") === 0, lit(1L)).when(col("h") === 1, lit(-1L))
+          .otherwise(lit(0L)).as("sign"))
+
+  /** FastRP's iteration-weighted terms: round k's state (x₁ … xₙ of
+    * `xs`) as (node, dim, w_k·`value`), for every non-zero w_k. */
+  private def weightedTerms(xs: IndexedSeq[DataFrame], iterWeights: Seq[Double],
+                            value: Column): DataFrame =
+    xs.tail.zip(iterWeights).collect { case (x, w) if w != 0.0 =>
+      x.select(col("node"), col("dim"), (value * lit(w)).as("val"))
+    }.reduce(_ union _)
 
   /** WEIGHTED FastRP core — [[fastRP]]'s projection machinery over an
     * edge relation that carries a weight: x_k(a,·) =
@@ -1107,6 +1108,8 @@ object GraphOps {
     require(dims >= 1, s"fastRPWeighted: dims must be >= 1, got $dims")
     require(iterWeights.nonEmpty,
       "fastRPWeighted: iterWeights must be non-empty")
+    require(iterWeights.exists(_ != 0.0),
+      "fastRPWeighted: all iteration weights are zero")
     val Scale = 1000000L
     val wdeg = wEdges.groupBy(col("a").as("node"))
       .agg(sum(col("w")).as("wd")).transform(pin)
@@ -1114,29 +1117,16 @@ object GraphOps {
       .join(wdeg.select(col("node").as("a"), col("wd")), "a")
       .repartition(col("b")).sortWithinPartitions("b")
       .transform(pin)
-    var q = wdeg.select(col("node"),
-        explode(sequence(lit(0L), lit(dims - 1L))).as("dim"))
-      .withColumn("h",
-        pmod(col("node") * lit(31L) + col("dim") * lit(1000003L) + lit(777L),
-          lit(1000000007L)) % 6)
-      .select(col("node"), col("dim"),
-        when(col("h") === 0, lit(Scale)).when(col("h") === 1, lit(-Scale))
-          .otherwise(lit(0L)).as("q"))
+    val q0 = projectionSigns(wdeg, dims)
+      .select(col("node"), col("dim"), (col("sign") * lit(Scale)).as("q"))
       .localCheckpoint()
-    var acc: DataFrame = null
-    for (w <- iterWeights) {
-      q = wEdgesD.join(q, col("b") === col("node"))
+    val qs = Fixpoint.rounds(iterWeights.size, q0) { (prev, _) =>
+      wEdgesD.join(prev.last, col("b") === col("node"))
         .groupBy(col("a").as("node"), col("dim"))
         .agg(floor(sum(col("w") * col("q")) / max(col("wd"))).as("q"))
-        .localCheckpoint()
-      if (w != 0.0) {
-        val term = q.select(col("node"), col("dim"),
-          (col("q") * lit(w)).as("val"))
-        acc = if (acc == null) term else acc.union(term)
-      }
     }
-    require(acc != null, "fastRPWeighted: all iteration weights are zero")
-    acc.groupBy("node", "dim")
+    weightedTerms(qs, iterWeights, col("q"))
+      .groupBy("node", "dim")
       .agg((sum(col("val")) / lit(Scale.toDouble)).as("val"))
   }
 
@@ -1229,26 +1219,26 @@ object GraphOps {
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(min(col("w")).as("w"))
       .transform(pin)
-    var settled = seeds.toDF("node").withColumn("cost", lit(0L))
+    // dedupe driver-side: a duplicated seed would be reported twice.
+    // State: the settled (node, cost) set, `fresh` on the rows whose
+    // cost the last round improved — the next round's frontier
+    val init = seeds.distinct.toDF("node")
+      .select(col("node"), lit(0L).as("cost"), lit(true).as("fresh"))
       .localCheckpoint()
-    var frontier = settled
-    for (_ <- 1 to maxHops) {
-      val cand = und.join(frontier.select(col("node").as("a"), col("cost")), "a")
-        .select(col("b").as("node"), (col("cost") + col("w")).as("cost"))
-        .groupBy("node").agg(min(col("cost")).as("cost"))
-      // improved = strictly better than (or absent from) the settled set
-      val improved = cand.join(
-          settled.select(col("node"), col("cost").as("old")),
-          Seq("node"), "left")
-        .filter(col("old").isNull || col("cost") < col("old"))
-        .select(col("node"), col("cost"))
-        .localCheckpoint()
-      settled = settled.unionByName(improved)
-        .groupBy("node").agg(min(col("cost")).as("cost"))
-        .localCheckpoint()
-      frontier = improved
-    }
-    settled
+    Fixpoint.rounds(maxHops, init) { (prev, _) =>
+      val settled = prev.last
+      val cand = und.join(settled.filter(col("fresh"))
+          .select(col("node").as("a"), col("cost")), "a")
+        .select(col("b").as("node"), (col("cost") + col("w")).as("cost"),
+          lit(true).as("cand"))
+      // min over (cost, cand): a candidate wins only when strictly
+      // cheaper than (or absent from) the settled set — on a tie the
+      // old row (cand = false) sorts first and the node stays settled
+      settled.select(col("node"), col("cost"), lit(false).as("cand"))
+        .unionByName(cand)
+        .groupBy("node").agg(min(struct(col("cost"), col("cand"))).as("m"))
+        .select(col("node"), col("m.cost").as("cost"), col("m.cand").as("fresh"))
+    }.last.select(col("node"), col("cost"))
   }
 
   /** PageRank in the DIRECTED (GDS NATURAL) orientation with
@@ -1367,21 +1357,19 @@ object GraphOps {
       iters: Int, damping: Double, share: Column, teleport: Column,
       dangling: Column): DataFrame = {
     val carried = init.columns.filter(_ != "rank").map(col).toSeq
-    var ranks = init.localCheckpoint()
-    for (_ <- 1 to iters) {
+    Fixpoint.rounds(iters, init.localCheckpoint()) { (prev, _) =>
+      val ranks = prev.last
       val dang = ranks.filter(col("out").isNull)
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
       val inc = withOut.join(ranks.select(col("node"), col("rank")),
           col("a") === col("node"))
         .select(col("b"), share.as("c"))
         .groupBy(col("b")).agg(sum(col("c")).as("s"))
-      ranks = ranks.join(inc, col("node") === col("b"), "left")
+      ranks.join(inc, col("node") === col("b"), "left")
         .crossJoin(broadcast(dang))
         .select(carried :+ (teleport + lit(damping) *
           (coalesce(col("s"), lit(0.0)) + dangling)).as("rank"): _*)
-        .localCheckpoint()
-    }
-    ranks.select(col("node"), col("rank"))
+    }.last.select(col("node"), col("rank"))
   }
 
   /** B20 (r10): PERSONALIZED PageRank (Neo4j GDS `pageRank` with
@@ -1533,7 +1521,7 @@ object GraphOps {
     val adj = neighborArrays(und, "a", "b", sorted = true)
       .select(col("node"), col("nbrs").as("nb"), col("deg"))
       .transform(pin)
-    var cur = seeds.select(col("node")).distinct()
+    val cur = seeds.select(col("node")).distinct()
       .join(adj.select("node"), Seq("node"), "left_semi")
       .withColumn("w", explode(sequence(lit(0), lit(walksPerSeed - 1))))
       .select((col("node") * walksPerSeed + col("w")).as("walk_id"),
@@ -1546,13 +1534,10 @@ object GraphOps {
       else adj.repartition(col("node")).sortWithinPartitions("node")
         .transform(pin),
       bcast)
-    var acc = cur.select(col("walk_id"), lit(0).as("step"), col("node"))
-    for (i <- 1 to steps) {
-      cur = step(walker, cur, i).localCheckpoint()
-      acc = acc.union(cur.select(col("walk_id"), lit(i).as("step"),
-        col("node")))
-    }
-    acc
+    Fixpoint.rounds(steps, cur)((prev, i) => step(walker, prev.last, i))
+      .zipWithIndex.map { case (f, i) =>
+        f.select(col("walk_id"), lit(i).as("step"), col("node"))
+      }.reduce(_ union _)
   }
 
   /** The stepping side of a [[walks]] run: the adjacency `adj`
@@ -1741,16 +1726,18 @@ object GraphOps {
     val eb = e0.repartition(col("b")).sortWithinPartitions("b")
       .transform(pin)
     val n = nodes.count() // scalar collect — model-fit class
-    var hub = nodes.withColumn("h", lit(1.0 / n))
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      auth = ea.join(hub, col("a") === col("node"))
-        .groupBy(col("b").as("node")).agg(sum(col("h")).as("x"))
-        .localCheckpoint()
-      hub = eb.join(auth, col("b") === col("node"))
-        .groupBy(col("a").as("node")).agg(sum(col("x")).as("h"))
-        .localCheckpoint()
+    // half-step t: odd t folds the hub vector into authorities, even
+    // t the authorities back into hubs
+    val hub0 = nodes.withColumn("h", lit(1.0 / n))
+    val vs = Fixpoint.rounds(2 * iters, hub0) { (prev, t) =>
+      if (t % 2 == 1)
+        ea.join(prev.last, col("a") === col("node"))
+          .groupBy(col("b").as("node")).agg(sum(col("h")).as("x"))
+      else
+        eb.join(prev.last, col("b") === col("node"))
+          .groupBy(col("a").as("node")).agg(sum(col("x")).as("h"))
     }
+    val (auth, hub) = (vs(2 * iters - 1), vs(2 * iters))
     val xs = auth.agg(sum(col("x")).as("xs"))
     val hs = hub.agg(sum(col("h")).as("hs"))
     val out = nodes
@@ -1838,24 +1825,21 @@ object GraphOps {
       s"sampleNeighborhood: fanouts must be >= 1, got $fanouts")
     import org.apache.spark.sql.expressions.Window
     val und = undirected(edges).transform(pin)
-    var frontier = seeds.select(col("node")).distinct().localCheckpoint()
-    var acc: DataFrame = null
-    for ((f, idx) <- fanouts.zipWithIndex) {
-      val hop = idx + 1
+    // state t is hop t's sampled (hop, src, dst) edges; hop t + 1's
+    // frontier is their distinct dst, and the seeds are state 0's
+    val seedState = seeds.select(col("node").as("dst"))
+    val hops = Fixpoint.rounds(fanouts.size, seedState) { (prev, hop) =>
+      val frontier = prev.last.select(col("dst").as("node")).distinct()
       val cand = und.join(broadcast(frontier), col("a") === col("node"))
         .select(col("a").as("src"), col("b").as("dst"))
       val rk = row_number().over(Window.partitionBy("src").orderBy(
         pmod(col("src") * lit(31L) + col("dst") * lit(1000003L) +
           lit(10007L * hop), lit(1000000007L)),
         col("dst")))
-      val sampled = cand.withColumn("rk", rk).filter(col("rk") <= f)
+      cand.withColumn("rk", rk).filter(col("rk") <= fanouts(hop - 1))
         .select(lit(hop).as("hop"), col("src"), col("dst"))
-        .localCheckpoint()
-      acc = if (acc == null) sampled else acc.union(sampled)
-      frontier = sampled.select(col("dst").as("node")).distinct()
-        .localCheckpoint()
     }
-    acc
+    hops.tail.reduce(_ union _)
   }
 
   /** B22 (r10): eigenvector centrality (Neo4j GDS `eigenvector`) with
@@ -1894,12 +1878,10 @@ object GraphOps {
     val nodes = und.select(col("a").as("node")).distinct()
       .transform(pin)
     val n = nodes.count() // scalar collect — model-fit class
-    var x = nodes.withColumn("x", lit(1.0 / n))
-    for (_ <- 1 to iters) {
-      x = und.join(x, col("b") === col("node"))
+    val x = Fixpoint.rounds(iters, nodes.withColumn("x", lit(1.0 / n))) { (prev, _) =>
+      und.join(prev.last, col("b") === col("node"))
         .groupBy(col("a").as("node")).agg(sum(col("x")).as("x"))
-        .localCheckpoint()
-    }
+    }.last
     val xs = x.agg(sum(col("x")).as("xs"))
     val out = nodes
       .join(x.select(col("node"), col("x").as("xr")), Seq("node"), "left")

@@ -6,14 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftprobe.ListenerDrain
 
-import graft.operators.{GraphOps, PipelineOps}
+import graft.operators.{Fixpoint, GraphOps, PipelineOps}
 
-/** The fixpoint operators' shared loop (operators/Fixpoint.scala):
-  * empty inputs converge to empty results, a loop that runs out of
-  * rounds throws instead of returning a partial result, and the
-  * convergence statistic rides the round's checkpoint job. */
+/** The round runners (operators/Fixpoint.scala): empty inputs converge
+  * to empty results, a loop that runs out of rounds throws instead of
+  * returning a partial result, the convergence statistic rides the
+  * round's checkpoint job, and the fixed-round runner hands each round
+  * its history and checkpoints its state in one job. */
 class FixpointSpec extends SparkSpec {
 
   private def edges(pairs: (Long, Long)*): DataFrame = {
@@ -95,5 +98,42 @@ class FixpointSpec extends SparkSpec {
       "one extra round must add exactly one query, its checkpoint")
     assert(long.sum - short.sum == long.last,
       "the extra round's jobs must all belong to its checkpoint query")
+  }
+
+  test("rounds hands round t exactly x0 … x(t-1) and returns x0 … xn") {
+    val init = spark.range(4).toDF("v")
+    val calls = scala.collection.mutable.ArrayBuffer.empty[(IndexedSeq[DataFrame], Int)]
+    val xs = Fixpoint.rounds(3, init) { (prev, t) =>
+      calls += (prev -> t)
+      prev.last.select((col("v") + t).as("v"))
+    }
+    assert(xs.size == 4)
+    assert(xs.head eq init, "init is used as given")
+    assert(calls.map(_._2) == Seq(1, 2, 3))
+    for ((prev, t) <- calls)
+      assert(prev.size == t && prev.indices.forall(i => prev(i) eq xs(i)),
+        s"round $t must see exactly the states before it")
+    assert(xs.map(_.collect().map(_.getLong(0)).sorted.toSeq) == Seq(
+      Seq(0L, 1L, 2L, 3L), Seq(1L, 2L, 3L, 4L), Seq(3L, 4L, 5L, 6L),
+      Seq(6L, 7L, 8L, 9L)))
+  }
+
+  test("rounds checkpoints each state in one job; n = 0 runs nothing") {
+    val init = spark.range(4).toDF("v")
+    var calls = 0
+    def run(n: Int): IndexedSeq[DataFrame] = Fixpoint.rounds(n, init) { (prev, _) =>
+      calls += 1
+      prev.last.select((col("v") * 2).as("v"))
+    }
+    var xs = IndexedSeq.empty[DataFrame]
+    assert(jobsPerQuery { xs = run(3) }.sum == 3, "one job per round")
+    for (x <- xs.tail) {
+      val plan = x.queryExecution.logical
+      assert(plan.isInstanceOf[LogicalRDD] && plan.children.isEmpty,
+        s"a state must be a checkpointed leaf, not a lineage:\n$plan")
+    }
+    calls = 0
+    assert(jobsPerQuery { xs = run(0) }.isEmpty)
+    assert(xs.size == 1 && (xs.head eq init) && calls == 0)
   }
 }

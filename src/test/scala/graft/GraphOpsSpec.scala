@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftprobe.ListenerDrain
 import graft.operators.GraphOps
 
 /** Graph algorithms (operators/GraphOps.scala): PageRank / BFS / node
@@ -320,13 +322,20 @@ class GraphOpsSpec extends SparkSpec {
     import s.implicits._
     val p = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     // pre-r11 a repeated seed doubled its sigma at layer 0 and its
-    // dependency/closeness contributions silently
-    def m(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(m(GraphOps.betweennessSampled(p, Seq(1L, 1L, 4L), maxHops = 3)) ==
-      m(GraphOps.betweennessSampled(p, Seq(1L, 4L), maxHops = 3)))
-    assert(m(GraphOps.harmonicCloseness(p, Seq(1L, 1L), maxHops = 3)) ==
-      m(GraphOps.harmonicCloseness(p, Seq(1L), maxHops = 3)))
+    // dependency/closeness contributions silently; bfsDistances and
+    // ssspBounded returned its row twice. Sorted row sequences, not
+    // maps: a map would hide a duplicated row
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    assert(rows(GraphOps.betweennessSampled(p, Seq(1L, 1L, 4L), maxHops = 3)) ==
+      rows(GraphOps.betweennessSampled(p, Seq(1L, 4L), maxHops = 3)))
+    assert(rows(GraphOps.harmonicCloseness(p, Seq(1L, 1L), maxHops = 3)) ==
+      rows(GraphOps.harmonicCloseness(p, Seq(1L), maxHops = 3)))
+    assert(rows(GraphOps.bfsDistances(p, Seq(1L, 1L), maxHops = 2)) ==
+      Seq("1,0", "2,1", "3,2"))
+    val w = p.withColumn("w", lit(5L))
+    for (h <- Seq(0, 2))
+      assert(rows(GraphOps.ssspBounded(w, Seq(1L, 1L), maxHops = h)) ==
+        Seq("1,0", "2,5", "3,10").take(h + 1), s"maxHops=$h")
   }
 
   test("eigenvectorCentrality: hand arithmetic on triangle+pendant, L1 mass") {
@@ -867,6 +876,26 @@ class GraphOpsSpec extends SparkSpec {
       val want = nbrs.map(hop1).sum / nbrs.size
       assert(math.abs(w2((n, d)) - want) < 1e-12)
     }
+  }
+
+  test("fastRP: all-zero iteration weights throw before any job runs") {
+    val g = edges((1L, 2L), (2L, 3L))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerDrain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[IllegalArgumentException](
+        GraphOps.fastRP(g, dims = 4, iterWeights = Seq(0.0, 0.0)))
+      intercept[IllegalArgumentException](GraphOps.fastRPWeighted(
+        g.withColumn("w", lit(1L)), dims = 4, iterWeights = Seq(0.0)))
+      ListenerDrain(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, "the weights are checked before the first checkpoint")
   }
 
   test("fastRP is layout-independent and feeds the ANN/dedup tier") {
