@@ -83,4 +83,16 @@ object GraftSession {
           "checkpoint and parquet write then starts chmod/readlink processes.")
     spark
   }
+
+  /** Run `f` with the session confs `kv` set, then restore each key to
+    * its previous value (or unset it). For work whose right setting
+    * differs from the session's and cannot be hinted per plan, e.g.
+    * a streaming query, which captures its confs at start. Not safe
+    * when other work runs on the same session concurrently. */
+  def withConf[T](spark: SparkSession, kv: (String, String)*)(f: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally old.foreach { case (k, ov) => ov.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

@@ -248,9 +248,7 @@ object Harness {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = skewConf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      skewConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    GraftSession.withConf(spark, skewConf: _*) {
       val left = spark.range(0, 200000).select(
         when(col("id") % 10 =!= 0, lit(0L)).otherwise(col("id")).as("k"), col("id").as("v"))
       val right = spark.range(0, 2000).select(col("id").as("k"), (col("id") * 2).as("w"))
@@ -260,9 +258,6 @@ object Harness {
       section("aqe_skew_join (final adaptive plan after execution — zipf key carries " +
         "90% of the left side; thresholds scaled to test data, structure identical " +
         "at 256 MB defaults)", joined.queryExecution.executedPlan.toString)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
     sb.toString
   }

@@ -23,14 +23,6 @@ object CdcQueries extends QueryPack {
       .when(col("event_type").isin("click", "view", "purchase"), "UPDATE")
       .otherwise("DELETE")
 
-  // source dir -> staged sink path, one build per JVM (the staging
-  // pattern of PipelineQueries.stagedDirs): the sink write is test
-  // INPUT for the read-back checks, not the work being re-measured
-  private val compactDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val retainDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val queries: Map[String, Q] = Map(
     // A1: events per type — the README's verify-clickhouse query.
     "cdc_event_type_counts" -> ((s, dir) =>
@@ -127,16 +119,11 @@ object CdcQueries extends QueryPack {
     // verifies the whole sink round trip (write partitioned → swap →
     // scan), not just the in-memory aggregation.
     "cdc_compacted" -> ((s, dir) => {
-      val path = compactDirs.computeIfAbsent(dir, d => {
-        // Staging.path, NOT a hand-built name: only the graft_staging_
-        // prefix is covered by the crash-recovery sweep — a SIGKILL'd
-        // driver would otherwise leak this table copy in /tmp forever
-        val p = Staging.path("compact", d)
+      val path = Staging.once("compact", dir) { p =>
         graft.sinks.ParquetSink.compactToLatest(
-          Tables.load(s, d, "events"), "user_id", Seq("ts", "event_id"),
+          Tables.load(s, dir, "events"), "user_id", Seq("ts", "event_id"),
           "ts", p)
-        p
-      })
+      }
       s.read.parquet(path).select(
           col("user_id"),
           col("event_type").as("last_type"),
@@ -150,14 +137,12 @@ object CdcQueries extends QueryPack {
     // protocol (staging + rename swap), and the surviving rows read
     // back and reconciled against the base table minus the range.
     "cdc_retention" -> ((s, dir) => {
-      val path = retainDirs.computeIfAbsent(dir, d => {
-        val p = Staging.path("retain", d) // swept name (see above)
+      val path = Staging.once("retain", dir) { p =>
         graft.sinks.ParquetSink.writeMonthly(
-          Tables.load(s, d, "events"), "ts", p, mode = "overwrite")
+          Tables.load(s, dir, "events"), "ts", p, mode = "overwrite")
         graft.sinks.ParquetSink.deleteTimeRange(s, p, "ts",
           "2024-01-10 00:00:00", "2024-01-20 00:00:00")
-        p
-      })
+      }
       s.read.parquet(path)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 4).as("sum_value"))
@@ -321,13 +306,15 @@ object CdcQueries extends QueryPack {
     // (embedded Derby; same writer surface as ClickHouse, only
     // url/driver options differ). Each lands the customer table,
     // reads it back through the transport, emits SNAPSHOT records,
-    // and must hash-match the original table. NOTE: unlike the other
-    // entries these builders run eager side-effecting IO (staging
-    // writes / a JDBC table overwrite) — rendering their plans
-    // (graft.Harness plans) runs that IO too, as Verify does.
+    // and must hash-match the original table. The write is the round
+    // trip being timed, so it runs every time, never once per JVM.
+    // NOTE: unlike the other entries these builders run eager
+    // side-effecting IO (staging writes / a JDBC table overwrite) —
+    // rendering their plans (graft.Harness plans) runs that IO too, as
+    // Verify does.
     "snapshot_csv" -> ((s, dir) => {
       val src = snapshotSource(s, dir)
-      val staging = stagingPath("csv", dir)
+      val staging = Staging.path("csv", dir)
       src.write.mode("overwrite").option("header", "true").csv(staging)
       snapshotProjection(graft.sources.Snapshot.fromCsv(s, staging, src.schema,
         entityCol = "c_custkey", labelCols = Seq("c_mktsegment"),
@@ -335,14 +322,7 @@ object CdcQueries extends QueryPack {
     }),
 
     "snapshot_jdbc" -> ((s, dir) => {
-      // keep derby.log out of whatever cwd the driver runs in (takes
-      // effect only if Derby hasn't booted yet in this JVM — true in
-      // the Verify/Bench processes, where only this entry uses Derby)
-      System.setProperty("derby.system.home",
-        System.getProperty("java.io.tmpdir"))
-      val opts = graft.sinks.JdbcSink.options(
-        "jdbc:derby:memory:graftq;create=true", "snapshot_src", "app", "app",
-        numPartitions = 4, driver = "org.apache.derby.jdbc.EmbeddedDriver")
+      val opts = Derby.options("graftq", "snapshot_src")
       // overwrite keeps the entry idempotent across verify/bench re-runs
       graft.sinks.JdbcSink.writer(snapshotSource(s, dir), opts)
         .mode("overwrite").save()
@@ -353,7 +333,7 @@ object CdcQueries extends QueryPack {
     }),
 
     "snapshot_orc" -> ((s, dir) => {
-      val staging = stagingPath("orc", dir)
+      val staging = Staging.path("orc", dir)
       snapshotSource(s, dir).write.mode("overwrite").orc(staging)
       snapshotProjection(graft.sources.Snapshot.fromOrc(s, staging,
         entityCol = "c_custkey", labelCols = Seq("c_mktsegment"),
@@ -976,11 +956,6 @@ object CdcQueries extends QueryPack {
       .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
 
   private def snapshotAsOf = to_timestamp(lit("2026-01-01 00:00:00"))
-
-  /** (kind, source-dir, pid)-keyed staging with exit-time cleanup —
-    * see [[Staging]]. */
-  private def stagingPath(kind: String, dir: String): String =
-    Staging.path(kind, dir)
 
   /** The shared round-trip output contract (one definition, three
     * transports — csv/orc/jdbc all hash against [[snapshotOracleSql]]). */

@@ -121,15 +121,12 @@ object CorpusQueries extends QueryPack {
       def spansOf(part: org.apache.spark.sql.DataFrame) =
         part.select(col("doc_id"), graft.operators.TextOps.wordChunks(
           split(col("text"), " "), 3).as("spans"))
-      val path = spanBloomDirs.computeIfAbsent(dir, d => {
-        val p = Staging.path("span_bloom", d) + "/bloom.bin"
+      val path = Staging.once("span_bloom", dir) { p =>
         graft.operators.Sketches.buildExactBloom(
-          spansOf(Tables.load(s, d, "documents")
-              .filter(col("text").isNotNull && col("doc_id") % 2 === 0))
+          spansOf(docs.filter(col("doc_id") % 2 === 0))
             .select(posexplode(col("spans")).as(Seq("idx", "span"))),
-          "span", p)
-        p
-      })
+          "span", s"$p/bloom.bin")
+      } + "/bloom.bin"
       val batch = spansOf(docs.filter(col("doc_id") % 3 === 0))
       val out = Dedup.spanDedupAgainst(batch, "doc_id", "spans", path)
       val batchSpans = batch
@@ -434,27 +431,17 @@ object CorpusQueries extends QueryPack {
       Tables.load(s, dir, "documents").select("doc_id", "source"),
       n = 20, seed = 7L)
 
-  // source dir -> persisted history-span bloom filter (once per JVM)
-  private val spanBloomDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // source dir -> staged cluster-map parquet (see dedup_survivors)
-  private val clusterDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** J3's cluster map (doc_id, cluster_id), staged once per JVM —
     * shared by dedup_survivors and the planted cluster/survivor
     * checks. */
   private def stagedClusters(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(clusterDirs.computeIfAbsent(dir, d => {
-      val p = Staging.path("clusters", d)
+    s.read.parquet(Staging.once("clusters", dir) { p =>
       PipelineOps.dedupClusters(
-          Dedup.jaccardPairs(Tables.load(s, d, "documents"),
+          Dedup.jaccardPairs(Tables.load(s, dir, "documents"),
             "doc_id", "text", n = 3, tau = 0.5, dfCap = 1000L))
         .write.mode("overwrite").parquet(p)
-      p
-    }))
+    })
 
   private val normSql =
     """regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"""

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import graft.Tables
+import org.apache.spark.sql.graftprobe.ListenerDrain
+import graft.{GraftSession, Tables}
 import graft.operators.Multimodal
 import graft.streaming.CdcStream
 
@@ -21,75 +22,35 @@ import graft.streaming.CdcStream
   */
 object PipelineQueries extends QueryPack {
 
-  // source dir -> fully-written staging path (see stream_json_parse).
-  // Keyed on the md5 of the FULL source path (32-bit String.hashCode
-  // could collide two dataset dirs and silently stream the wrong
-  // staged payloads) PLUS the process id (a concurrent second driver
-  // process must not overwrite the dir this process is mid-stream
-  // over — Staging registers it for exit-time cleanup), and populated
-  // inside computeIfAbsent so the path is published only after the
-  // write completes — a concurrent second caller in THIS process
-  // blocks until the first finishes (happens-before via the map's
-  // internal lock) instead of reading a half-written dir.
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // source dir -> doubled-events staging path (stream_dedup_exact);
-  // same once-per-JVM publish-after-write discipline as stagedDirs
-  private val dupStagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // source dir -> landed HLL state path (stream_uniq_state_check)
-  private val uniqLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // source dir -> landed closed-version history path (stream_scd2)
-  private val scd2Landed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // source dir -> landed finalized-session / dedup-survivor paths
-  // (stream_sessionize / stream_dedup_exact, r10 parquet landings)
-  private val sessLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val dedupLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // source dir -> landed topK state path (stream_topk_state_check)
-  private val topkLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   // unique memory-sink names for stream_progress across warmup/timed
   // runs in one JVM (a reused name would re-register the same table)
   private val progressId = new java.util.concurrent.atomic.AtomicLong(0)
 
-  // dir -> landed Derby table / monthly landing path: the stream runs
-  // once per JVM and the timed entry reads the landed store back (the
-  // cdc_compacted staging pattern — the sink round trip is verified,
-  // re-runs measure the scan + rollup, and AvailableNow checkpoints
-  // make a re-run a no-op anyway)
-  private val jdbcLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // dir -> staged relationship-event wire payloads (stream_latest_rel)
-  private val relStagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // dir -> landed output of the Bloom-dedup stream (streams once per
-  // JVM, timed re-runs read the landed store — the jdbcLanded pattern)
-  private val bloomLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val monthlyLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The month-partitioned landing tree for `dir`, streamed once per
     * JVM (shared by stream_land_monthly + storage_stats — one landing,
-    * two verification angles). */
+    * two verification angles). The checkpoint sits beside the tree,
+    * outside what readMonthly and statsMonthly list. */
   private def monthlyLandingFor(s: org.apache.spark.sql.SparkSession,
                                 dir: String): String =
-    monthlyLanded.computeIfAbsent(dir, d => {
-      val p = Staging.path("stream_land", d)
-      val ckpt = Staging.path("stream_land_ckpt", d)
-      CdcStream.landMonthly(CdcStream.readEvents(s, d), "ts", p, ckpt)
-      p
-    })
+    Staging.once("stream_land", dir) { p =>
+      CdcStream.landMonthly(CdcStream.readEvents(s, dir), "ts", s"$p/out", s"$p/ckpt")
+    } + "/out"
+
+  /** `dir`'s events staged once per JVM as two files (even event_id,
+    * then odd), streamed one file per micro-batch: the state landings
+    * read it so that batch 2 merges into the state batch 1 landed. */
+  private def eventHalves(s: org.apache.spark.sql.SparkSession,
+                          dir: String): org.apache.spark.sql.DataFrame = {
+    val in = Staging.once("event_halves", dir) { p =>
+      val ev = s.read.parquet(s"$dir/events.parquet")
+      ev.filter(col("event_id") % 2 === 0)
+        .coalesce(1).write.mode("overwrite").parquet(p)
+      ev.filter(col("event_id") % 2 === 1)
+        .coalesce(1).write.mode("append").parquet(p)
+    }
+    s.readStream.schema(s.read.parquet(in).schema)
+      .option("maxFilesPerTrigger", 1).parquet(in)
+  }
 
   val queries: Map[String, Q] = Map(
     // G1: binary metadata extraction (byte length, header, digest).
@@ -186,20 +147,13 @@ object PipelineQueries extends QueryPack {
     // stand-in for the Kafka source; the parse/agg dataflow is
     // identical.
     "stream_json_parse" -> ((s, dir) => {
-      // staging written once per JVM per source dir (in-memory guard,
-      // NOT an on-disk marker: /tmp outlives the process, and stale
-      // staged payloads would silently diverge from the live oracle):
       // the synthesized wire-format file set is test INPUT, not part
       // of the streamed work being exercised/measured
-      val staging = stagedDirs.computeIfAbsent(dir, d => {
-        val p = Staging.register(
-          s"${System.getProperty("java.io.tmpdir")}/graft_stream_json_" +
-            s"${Staging.md5Hex(d)}_${ProcessHandle.current().pid()}")
+      val staging = Staging.once("stream_json", dir) { p =>
         graft.sources.CdcJson
-          .synthesizeNodeJson(Tables.load(s, d, "events"))
+          .synthesizeNodeJson(Tables.load(s, dir, "events"))
           .write.mode("overwrite").text(p)
-        p
-      })
+      }
       val raw = s.readStream
         .schema(new org.apache.spark.sql.types.StructType()
           .add("value", org.apache.spark.sql.types.StringType))
@@ -224,11 +178,10 @@ object PipelineQueries extends QueryPack {
     // ops surface measures the pipeline, not an approximation of it.
     "stream_progress" -> ((s, dir) => {
       import s.implicits._
-      val expected = Tables.load(s, dir, "events").count()
       val c = graft.streaming.Progress.attach(s)
       try {
         val name = s"graft_progress_${progressId.incrementAndGet()}"
-        withSqlConf(s, "spark.sql.shuffle.partitions" -> StatefulWidth) {
+        GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> StatefulWidth) {
           val q = CdcStream.eventCounts(CdcStream.readEvents(s, dir))
             .writeStream.format("memory").queryName(name)
             .outputMode(OutputMode.Complete())
@@ -236,12 +189,9 @@ object PipelineQueries extends QueryPack {
             .start()
           q.awaitTermination()
         }
-        // listener delivery is async: poll until the monitor's rows
-        // account for the full source (or a generous deadline)
-        val deadline = System.currentTimeMillis() + 30000
-        while (c.forQuery(name).map(_.numInputRows).sum < expected &&
-               System.currentTimeMillis() < deadline)
-          Thread.sleep(50)
+        // listener delivery is async, but every progress event was
+        // posted to the listener bus before the query terminated
+        ListenerDrain(s)
         val rows = c.forQuery(name)
         Seq((rows.map(_.numInputRows).sum, rows.nonEmpty))
           .toDF("rows_total", "saw_batches")
@@ -258,12 +208,11 @@ object PipelineQueries extends QueryPack {
     "stream_counts_watermarked" -> ((s, dir) => {
       // the determinism argument above leans on the trailing no-data
       // batch advancing the watermark after the last data batch — pin
-      // the conf (its default) rather than inherit whatever the host
-      // session was configured with
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+      // the conf (its default) for the run rather than inherit
+      // whatever the host session was configured with
       val agg = CdcStream.eventCountsWatermarked(
         CdcStream.readEvents(s, dir), delay = "1 day")
-      runRightSized(s, agg, OutputMode.Append())
+      runRightSized(s, agg, OutputMode.Append(), NoDataBatches -> "true")
         .select(
           unix_micros(col("window.start")).as("day_us"),
           col("event_type"), col("cnt"), col("sum_value"))
@@ -277,11 +226,10 @@ object PipelineQueries extends QueryPack {
     // same finalization cut (the stream_counts_watermarked
     // determinism argument, overlap factor 2).
     "stream_sliding_counts" -> ((s, dir) => {
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
       val agg = CdcStream.eventCountsSliding(
         CdcStream.readEvents(s, dir), size = "6 hours",
         slide = "3 hours", delay = "1 day")
-      runRightSized(s, agg, OutputMode.Append())
+      runRightSized(s, agg, OutputMode.Append(), NoDataBatches -> "true")
         .select(
           unix_micros(col("window.start")).as("win_us"),
           col("event_type"), col("cnt"), col("sum_value"))
@@ -304,14 +252,13 @@ object PipelineQueries extends QueryPack {
     // spark.driver.maxResultSize at the 100× pack. The landed table
     // is the identical finalized-session set.
     "stream_sessionize" -> ((s, dir) => {
-      val landed = sessLanded.computeIfAbsent(dir, d => {
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-        val agg = CdcStream.sessionize(CdcStream.readEvents(s, d),
+      val landed = Staging.once("sess_stream", dir) { p =>
+        val agg = CdcStream.sessionize(CdcStream.readEvents(s, dir),
           gap = "30 minutes", delay = "1 day")
-        val stage = Staging.path("sess_stream", d)
-        CdcStream.runToParquet(agg, stage)
-        stage
-      })
+        GraftSession.withConf(s, NoDataBatches -> "true") {
+          CdcStream.runToParquet(agg, p)
+        }
+      }
       s.read.parquet(s"$landed/out")
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("sess_start_us"),
@@ -326,26 +273,20 @@ object PipelineQueries extends QueryPack {
     // read BACK through JDBC for the rollup, so the oracle checks the
     // full stream → batched-insert → scan loop, not the in-memory agg.
     "stream_jdbc_land" -> ((s, dir) => {
-      System.setProperty("derby.system.home",
-        System.getProperty("java.io.tmpdir"))
-      def opts(table: String) = graft.sinks.JdbcSink.options(
-        "jdbc:derby:memory:graftstream;create=true", table, "app", "app",
-        numPartitions = 4, driver = "org.apache.derby.jdbc.EmbeddedDriver")
-      val table = jdbcLanded.computeIfAbsent(dir, d => {
-        val t = s"stream_land_${Staging.md5Hex(d).take(8)}"
-        val ckpt = Staging.path("stream_jdbc_ckpt", d)
-        val stream = CdcStream.readEvents(s, d)
+      val table = s"stream_land_${Staging.md5Hex(dir).take(8)}"
+      val opts = Derby.options("graftstream", table)
+      Staging.once("stream_jdbc_ckpt", dir) { ckpt =>
+        val stream = CdcStream.readEvents(s, dir)
           .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
             col("user_id"), col("event_type"), col("value"))
-        CdcStream.sinkEachBatch(stream, opts(t), ckpt,
-          queryName = Some(s"graft_jdbc_land_$t"))
-        t
-      })
+        CdcStream.sinkEachBatch(stream, opts, ckpt,
+          queryName = Some(s"graft_jdbc_land_$table"))
+      }
       // min_day/max_day make this oracle time-SIGHTED: a corrupted
       // event-time path (e.g. all timestamps collapsed to 1970 by a
       // representation mismatch) previously sailed through because the
       // compared rollup dropped every ts-derived column
-      graft.sinks.JdbcSink.read(s, opts(table))
+      graft.sinks.JdbcSink.read(s, opts)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"),
           count_distinct(col("user_id")).as("n_users"),
@@ -396,26 +337,21 @@ object PipelineQueries extends QueryPack {
     // result is batching-independent. (Bounded-state behavior under a
     // SHORT horizon stays covered by the CdcStream spec.)
     "stream_dedup_exact" -> ((s, dir) => {
-      val staging = dupStagedDirs.computeIfAbsent(dir, d => {
-        val p = Staging.path("dup_events", d)
-        val raw = s.read.parquet(s"$d/events.parquet")
-        raw.union(raw).write.mode("overwrite").parquet(p)
-        p
-      })
-      val raw = CdcStream.streamEventParquet(s, staging, schemaFrom = staging)
-        // content fingerprint (the D1 dedup key, streaming form)
-        .withColumn("fp", md5(concat_ws("|",
-          col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))))
-      val deduped = CdcStream.dedupExactStream(raw, "fp", "ts", "3650 days")
       // r10: parquet landing (not the memory sink) — survivor output
       // is row-scaled and broke spark.driver.maxResultSize at 100×;
       // see stream_sessionize.
-      val landed = dedupLanded.computeIfAbsent(dir, d => {
-        val stage = Staging.path("dedup_stream", d)
-        CdcStream.runToParquet(deduped, stage)
-        stage
-      })
+      val landed = Staging.once("dedup_stream", dir) { p =>
+        val in = s"$p/in"
+        val events = s.read.parquet(s"$dir/events.parquet")
+        events.union(events).write.mode("overwrite").parquet(in)
+        val raw = CdcStream.streamEventParquet(s, in, schemaFrom = in)
+          // content fingerprint (the D1 dedup key, streaming form)
+          .withColumn("fp", md5(concat_ws("|",
+            col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value"))))
+        CdcStream.runToParquet(
+          CdcStream.dedupExactStream(raw, "fp", "ts", "3650 days"), p)
+      }
       // ts_us in the compared rows makes the oracle time-SIGHTED: a
       // representation mismatch that shifts or collapses event time
       // now hash-mismatches instead of hiding behind ts-free columns
@@ -439,10 +375,9 @@ object PipelineQueries extends QueryPack {
     // batch exactly because the chain build is a pure left fold and a
     // global time cut preserves per-entity order across batches.
     "stream_scd2" -> ((s, dir) => {
-      val landed = scd2Landed.computeIfAbsent(dir, d => {
-        val stage = Staging.path("scd2_stream", d)
-        val in = s"$stage/in"
-        val ev = Tables.load(s, d, "events")
+      val landed = Staging.once("scd2_stream", dir) { p =>
+        val in = s"$p/in"
+        val ev = Tables.load(s, dir, "events")
         val Array(loUs, hiUs) = ev
           .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
           .head().toSeq.map(_.asInstanceOf[Long]).toArray
@@ -468,16 +403,9 @@ object PipelineQueries extends QueryPack {
         val evs = stream.select(col("event_id"),
           unix_micros(col("ts")).as("ts_us"), col("user_id"),
           col("event_type"), col("value")).as[CdcStream.Ev]
-        val q = CdcStream.scd2Closed(evs).toDF().writeStream
-          .format("parquet").option("path", s"$stage/closed")
-          .option("checkpointLocation", s"$stage/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s"$stage/closed"
-      })
-      s.read.parquet(landed)
+        CdcStream.runToParquet(CdcStream.scd2Closed(evs).toDF(), p)
+      }
+      s.read.parquet(s"$landed/out")
         .select(col("user_id"), col("version"), col("event_type"),
           round(col("value"), 4).as("value"),
           col("valid_from_us"), col("valid_to_us"))
@@ -496,9 +424,8 @@ object PipelineQueries extends QueryPack {
     // batching-independent (both chunks in one batch ⇒ the in-batch
     // dropDuplicates leg yields the same set).
     "stream_bloom_dedup" -> ((s, dir) => {
-      val landed = bloomLanded.computeIfAbsent(dir, d => {
-        val stage = Staging.path("bloom_stream", d)
-        val docs = s.read.parquet(s"$d/documents.parquet")
+      val landed = Staging.once("bloom_stream", dir) { stage =>
+        val docs = s.read.parquet(s"$dir/documents.parquet")
         // full-row fingerprint (doc_id leads and is unique, so fp is
         // unique per row — the dedup winner is deterministic)
         val fp = md5(concat_ws("|", col("doc_id"), col("text"),
@@ -523,9 +450,8 @@ object PipelineQueries extends QueryPack {
             if (new java.io.File(out).exists()) s.read.parquet(out)
             else emptyFp),
           queryName = Some("stream_bloom_dedup"))
-        out
-      })
-      s.read.parquet(landed)
+      }
+      s.read.parquet(s"$landed/out")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .orderBy("doc_id")
     }),
@@ -539,23 +465,13 @@ object PipelineQueries extends QueryPack {
     // Verdict columns: rows_state must equal the exact count (clean
     // AvailableNow run, no replay), estimate within the HLL bound.
     "stream_uniq_state_check" -> ((s, dir) => {
-      val statePath = uniqLanded.computeIfAbsent(dir, d => {
-        val stage = Staging.path("uniq_state_stream", d)
-        val ev = s.read.parquet(s"$d/events.parquet")
-        val in = s"$stage/in"
-        ev.filter(col("event_id") % 2 === 0)
-          .coalesce(1).write.mode("overwrite").parquet(in)
-        ev.filter(col("event_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(in)
-        val stream = s.readStream.schema(s.read.parquet(in).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-        CdcStream.uniqStateLand(stream, Seq("event_type"), "user_id",
-          s"$stage/state", s"$stage/ckpt",
+      val stage = Staging.once("uniq_state_stream", dir) { p =>
+        CdcStream.uniqStateLand(eventHalves(s, dir), Seq("event_type"),
+          "user_id", s"$p/state", s"$p/ckpt",
           queryName = Some("graft_uniq_state_land"))
-        s"$stage/state/state"
-      })
+      }
       val est = graft.operators.Sketches.estimateDistinct(
-        s.read.parquet(statePath))
+        s.read.parquet(s"$stage/state/state"))
       val exact = Tables.load(s, dir, "events").groupBy("event_type")
         .agg(count(lit(1)).as("total_exact"),
           count_distinct(col("user_id")).as("uniq_exact"))
@@ -580,24 +496,14 @@ object PipelineQueries extends QueryPack {
     // clear the k-th largest exact count (tie-robust validity).
     "stream_topk_state_check" -> ((s, dir) => {
       val cap = 32768
-      val statePath = topkLanded.computeIfAbsent(dir, d => {
-        val stage = Staging.path("topk_state_stream", d)
-        val ev = s.read.parquet(s"$d/events.parquet")
-        val in = s"$stage/in"
-        ev.filter(col("event_id") % 2 === 0)
-          .coalesce(1).write.mode("overwrite").parquet(in)
-        ev.filter(col("event_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(in)
-        val stream = s.readStream.schema(s.read.parquet(in).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-        CdcStream.topkStateLand(stream, Seq("event_type"), "user_id",
-          s"$stage/state", s"$stage/ckpt", maxItemsTracked = cap,
+      val stage = Staging.once("topk_state_stream", dir) { p =>
+        CdcStream.topkStateLand(eventHalves(s, dir), Seq("event_type"),
+          "user_id", s"$p/state", s"$p/ckpt", maxItemsTracked = cap,
           queryName = Some("graft_topk_state_land"))
-        s"$stage/state/state"
-      })
+      }
       val est = graft.operators.Sketches.topk(
           graft.operators.Sketches.mergeTopkStates(
-            s.read.parquet(statePath), Seq("event_type"),
+            s.read.parquet(s"$stage/state/state"), Seq("event_type"),
             maxItemsTracked = cap), k = 10)
         .select(col("event_type"), explode(col("topk")).as("e"))
         .select(col("event_type"), col("e.item").as("item"),
@@ -664,13 +570,11 @@ object PipelineQueries extends QueryPack {
     // Oracle = the batch FINAL over orders.
     "stream_latest_rel" -> ((s, dir) => {
       import s.implicits._
-      val staging = relStagedDirs.computeIfAbsent(dir, d => {
-        val p = Staging.path("stream_rel_json", d)
+      val staging = Staging.once("stream_rel_json", dir) { p =>
         graft.sources.CdcJson
-          .synthesizeRelJson(Tables.load(s, d, "orders"))
+          .synthesizeRelJson(Tables.load(s, dir, "orders"))
           .write.mode("overwrite").text(p)
-        p
-      })
+      }
       val raw = s.readStream
         .schema(new org.apache.spark.sql.types.StructType()
           .add("value", org.apache.spark.sql.types.StringType))
@@ -801,11 +705,8 @@ object PipelineQueries extends QueryPack {
       // watermark advance, so the emitted set is identical (the
       // oracle pins it). Production keeps session defaults; the
       // bounded-delay eviction behavior stays spec'd in PipelineSpec.
-      withSqlConf(s,
-          "spark.sql.shuffle.partitions" -> StatefulWidth,
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-        CdcStream.runToMemory(joined, OutputMode.Append())
-      }.orderBy("click_id", "purchase_id")
+      runRightSized(s, joined, OutputMode.Append(), NoDataBatches -> "false")
+        .orderBy("click_id", "purchase_id")
     }),
 
     // H19 (r12): stream-stream LEFT OUTER interval join — "which
@@ -833,9 +734,8 @@ object PipelineQueries extends QueryPack {
           col("l.user_id").as("user_id"),
           unix_micros(col("l.ts")).as("click_us"),
           unix_micros(col("r.ts")).as("purchase_us"))
-      withSqlConf(s, "spark.sql.shuffle.partitions" -> StatefulWidth) {
-        CdcStream.runToMemory(joined, OutputMode.Append())
-      }.orderBy("click_id", "purchase_id")
+      runRightSized(s, joined, OutputMode.Append())
+        .orderBy("click_id", "purchase_id")
     })
   )
 
@@ -852,29 +752,20 @@ object PipelineQueries extends QueryPack {
     * scoped to the stream's start-to-termination window). */
   private final val StatefulWidth = "8"
 
-  /** [[CdcStream.runToMemory]] under [[StatefulWidth]] — the width is
-    * captured at query start, so the conf wraps the start/await. */
+  /** Whether a stream runs the trailing no-data batch that advances
+    * the watermark past the last data batch. */
+  private final val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** [[CdcStream.runToMemory]] under [[StatefulWidth]] and `conf` —
+    * both are captured at query start, so the confs wrap the
+    * start/await and are restored after it. */
   private def runRightSized(s: org.apache.spark.sql.SparkSession,
                             df: org.apache.spark.sql.DataFrame,
-                            mode: OutputMode): org.apache.spark.sql.DataFrame =
-    withSqlConf(s, "spark.sql.shuffle.partitions" -> StatefulWidth) {
+                            mode: OutputMode,
+                            conf: (String, String)*): org.apache.spark.sql.DataFrame =
+    GraftSession.withConf(s, ("spark.sql.shuffle.partitions" -> StatefulWidth) +: conf: _*) {
       CdcStream.runToMemory(df, mode)
     }
-
-  /** Set session SQL confs for the duration of `f` (restore-on-exit) —
-    * for stream runs whose correct configuration differs from the
-    * session default (stateful-shuffle width is captured at query
-    * start and cannot be hinted per-plan). Drivers here run entries
-    * sequentially; this is not safe under concurrent entry execution
-    * on one session. */
-  private def withSqlConf[T](s: org.apache.spark.sql.SparkSession,
-                             kv: (String, String)*)(f: => T): T = {
-    val old = kv.map { case (k, _) => k -> s.conf.getOption(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try f
-    finally old.foreach { case (k, ov) =>
-      ov.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
 
   /** Entries whose timed path starts the streaming engine each run
     * (runToMemory / a fresh query). The landed-store entries

@@ -159,12 +159,10 @@ object SimilarityQueries extends QueryPack {
       // cost discipline as SketchQueries' staged ground truths: the
       // baseline is a deterministic corpus function the check would
       // otherwise recompute on every bench run)
-      val exact = s.read.parquet(exactThresholdDirs.computeIfAbsent(dir, d => {
-        val p = Staging.path("exact_threshold", d)
-        queries("sim_bruteforce_topk")(s, d)
+      val exact = s.read.parquet(Staging.once("exact_threshold", dir) { p =>
+        queries("sim_bruteforce_topk")(s, dir)
           .write.mode("overwrite").parquet(p)
-        p
-      }))
+      })
       val quant = queries("sim_quantized_topk")(s, dir)
       quant.select("q_id", "vec_id")
         .join(exact.select("q_id", "vec_id"), Seq("q_id", "vec_id"), "left_semi")
@@ -175,11 +173,6 @@ object SimilarityQueries extends QueryPack {
             .as("recall_ok"))
     })
   )
-
-  // source dir -> staged exact threshold-search parquet (see
-  // sim_quantized_check)
-  private val exactThresholdDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The D5-style size guard on the RAW corpus table — probed before
     * any per-row vector work, so the guard costs a zero-column scan,

@@ -6,7 +6,7 @@ package graft.queries
   * factors never collide, and two concurrent driver processes (e.g.
   * Verify and Bench) never race one directory with
   * overwrite-while-scanning. The pid suffix means no later process
-  * ever reuses a dir — so every registered path is deleted on JVM
+  * ever reuses a dir — so every path handed out is deleted on JVM
   * exit, or /tmp would accumulate a full table export per run.
   */
 private[queries] object Staging {
@@ -26,6 +26,8 @@ private[queries] object Staging {
   locally {
     val pidSuffix = ".*_([0-9]+)$".r
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    // graft_stream_json_ is the name earlier builds gave one staged
+    // input; their leftover dirs are still pruned
     val candidates = tmp.listFiles((_, n) =>
       n.startsWith("graft_staging_") || n.startsWith("graft_stream_json_"))
     if (candidates != null) candidates.foreach { f =>
@@ -40,12 +42,40 @@ private[queries] object Staging {
     }
   }
 
-  def path(kind: String, dir: String): String =
-    register(s"${System.getProperty("java.io.tmpdir")}/graft_staging_" +
-      s"${kind}_${md5Hex(dir)}_${ProcessHandle.current().pid()}")
+  def path(kind: String, dir: String): String = {
+    val p = s"${System.getProperty("java.io.tmpdir")}/graft_staging_" +
+      s"${kind}_${md5Hex(dir)}_${ProcessHandle.current().pid()}"
+    created.add(p)
+    p
+  }
 
-  /** Track an externally-built staging path for exit-time cleanup. */
-  def register(p: String): String = { created.add(p); p }
+  /** Set once the build of its path has returned. */
+  private final class Cell { @volatile var built = false }
+
+  private val cells = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
+
+  /** [[path]]`(kind, dir)`, built once per JVM: the first caller runs
+    * `build` on the path, and every caller gets the path only after
+    * `build` has returned (a concurrent caller blocks until then).
+    * This is how an entry whose timed work is the read-back lands its
+    * store: the landing is test input, built on the first run, not
+    * re-measured. In-memory, not an on-disk marker: /tmp outlives the
+    * process, and a stale store would silently diverge from the live
+    * oracle. A `build` that throws publishes nothing; the next call
+    * builds again from an empty directory. `build` runs outside the
+    * map's compute, so it may itself call `once` for another kind. */
+  def once(kind: String, dir: String)(build: String => Unit): String = {
+    val p = path(kind, dir)
+    val cell = cells.computeIfAbsent(p, _ => new Cell)
+    if (!cell.built) cell.synchronized {
+      if (!cell.built) {
+        deleteRecursively(new java.io.File(p))
+        build(p)
+        cell.built = true
+      }
+    }
+    p
+  }
 
   def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

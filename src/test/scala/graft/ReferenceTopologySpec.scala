@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftprobe.ListenerDrain
 import org.apache.spark.sql.types.{StringType, StructType}
 import graft.operators.CurrentState
 import graft.sinks.{JdbcSink, ParquetSink}
@@ -89,12 +90,10 @@ class ReferenceTopologySpec extends SparkSpec {
     // every wire row. Count ONLY this test's named hops: the session
     // (and its listener bus) is shared across concurrently-running
     // suites, so an unfiltered sum would race their streams
-    // (listener delivery is async — poll briefly).
-    val deadline = System.currentTimeMillis() + 30000
-    def rowsSeen = (monitor.forQuery("topo_jdbc_hop") ++
+    // (listener delivery is async — drain the bus first).
+    ListenerDrain(spark)
+    val rowsSeen = (monitor.forQuery("topo_jdbc_hop") ++
       monitor.forQuery("topo_parquet_hop")).map(_.numInputRows).sum
-    while (rowsSeen < 2 * nEvents && System.currentTimeMillis() < deadline)
-      Thread.sleep(100)
     assert(rowsSeen == 2 * nEvents,
       s"monitor saw $rowsSeen rows, expected ${2 * nEvents} (2 hops)")
     } finally graft.streaming.Progress.detach(spark, monitor)
