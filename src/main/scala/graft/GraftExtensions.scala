@@ -92,8 +92,11 @@ object GraftExtensions {
         CountMinEstimate(args.head, hashedOrNull(args(1)))
       }))
 
-  /** Pre-hash a value column for [[UniqUpTo]], keeping nulls null. */
-  private def hashedOrNull(e: Expression): Expression =
+  /** Pre-hash a value to 64 bits for [[UniqUpTo]] and the count-min
+    * aggregates, keeping nulls null (xxhash64 alone hashes a null to
+    * the bare seed, a phantom item). The SQL functions here and the
+    * Column forms in [[graft.operators.Sketches]] share it. */
+  private[graft] def hashedOrNull(e: Expression): Expression =
     If(IsNull(e), Literal(null, LongType), XxHash64(Seq(e), 42L))
 
   private def intLiteral(e: Expression, what: String): Int = e match {

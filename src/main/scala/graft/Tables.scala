@@ -24,14 +24,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session conf required to scan TIMESTAMP(NANOS) parquet should the
-    * testdata generation carry it (Spark has no nanos timestamp type,
-    * so nanos come in as long and [[normalizeEventTime]] converts).
-    * Harmless for micros-timestamp data.
-    */
-  val requiredConf: Map[String, String] =
-    Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
-
   /** On-disk representations accepted for an event-time column. */
   private val tsRepr: Seq[DataType] =
     Seq(TimestampType, TimestampNTZType, LongType)

@@ -22,6 +22,27 @@ import org.apache.spark.sql.functions._
   */
 object Funnel {
 
+  /** Per entity, the chronologically sorted event history every
+    * funnel/sequence DP folds over: `evs` = array of (ts_us, tie,
+    * s1..sk), sk = whether the event matches `steps(k-1)`. Struct sort
+    * is lexicographic by field order, so (ts_us, tie) leads and the
+    * order is total. */
+  private def history(op: String, events: DataFrame, userCol: String,
+                      tsCol: String, tieCol: String,
+                      steps: Seq[Column]): DataFrame = {
+    require(steps.nonEmpty, s"$op needs at least one step")
+    val k = steps.length
+    events.select(
+      col(userCol) +:
+        unix_micros(col(tsCol)).as("ts_us") +:
+        col(tieCol).cast("long").as("tie") +:
+        steps.zipWithIndex.map { case (c, i) => c.as(s"s${i + 1}") }: _*)
+      .groupBy(userCol)
+      .agg(sort_array(collect_list(struct(
+        col("ts_us") +: col("tie") +:
+          (1 to k).map(i => col(s"s$i")): _*))).as("evs"))
+  }
+
   /** Max funnel level per entity: the length of the longest chain of
     * events e₁ < e₂ < … < e_L (strict (ts, tieCol) order — the tie
     * column makes the order total, so equal-timestamp events chain
@@ -41,19 +62,8 @@ object Funnel {
   def windowFunnel(events: DataFrame, userCol: String, tsCol: String,
                    tieCol: String, steps: Seq[Column],
                    windowMicros: Long): DataFrame = {
-    require(steps.nonEmpty, "windowFunnel needs at least one step")
     val k = steps.length
-    val flagged = events.select(
-      col(userCol) +:
-        unix_micros(col(tsCol)).as("ts_us") +:
-        col(tieCol).cast("long").as("tie") +:
-        steps.zipWithIndex.map { case (c, i) => c.as(s"s${i + 1}") }: _*)
-    // sorted chronological history: struct sort is lexicographic by
-    // field order, so (ts_us, tie) leads and the order is total
-    val hist = flagged.groupBy(userCol)
-      .agg(sort_array(collect_list(struct(
-        col("ts_us") +: col("tie") +:
-          (1 to k).map(i => col(s"s$i")): _*))).as("evs"))
+    val hist = history("windowFunnel", events, userCol, tsCol, tieCol, steps)
     // DP state: best(i) = latest chain-start among length-i chains
     // (null = none). Transitions read the PRE-event state (acc.*), so
     // one event never serves two steps of the same chain, and chains
@@ -109,17 +119,8 @@ object Funnel {
                                  tsCol: String, tieCol: String,
                                  steps: Seq[Column],
                                  windowMicros: Long): DataFrame = {
-    require(steps.nonEmpty, "windowFunnel needs at least one step")
     val k = steps.length
-    val flagged = events.select(
-      col(userCol) +:
-        unix_micros(col(tsCol)).as("ts_us") +:
-        col(tieCol).cast("long").as("tie") +:
-        steps.zipWithIndex.map { case (c, i) => c.as(s"s${i + 1}") }: _*)
-    val hist = flagged.groupBy(userCol)
-      .agg(sort_array(collect_list(struct(
-        col("ts_us") +: col("tie") +:
-          (1 to k).map(i => col(s"s$i")): _*))).as("evs"))
+    val hist = history("windowFunnel", events, userCol, tsCol, tieCol, steps)
     val init = struct(
       lit(Long.MinValue).as("cur_ts") +:
         ((1 to k).map(i => lit(null).cast("long").as(s"p$i")) ++
@@ -169,17 +170,8 @@ object Funnel {
                               tsCol: String, tieCol: String,
                               steps: Seq[Column],
                               windowMicros: Long): DataFrame = {
-    require(steps.nonEmpty, "windowFunnel needs at least one step")
     val k = steps.length
-    val flagged = events.select(
-      col(userCol) +:
-        unix_micros(col(tsCol)).as("ts_us") +:
-        col(tieCol).cast("long").as("tie") +:
-        steps.zipWithIndex.map { case (c, i) => c.as(s"s${i + 1}") }: _*)
-    val hist = flagged.groupBy(userCol)
-      .agg(sort_array(collect_list(struct(
-        col("ts_us") +: col("tie") +:
-          (1 to k).map(i => col(s"s$i")): _*))).as("evs"))
+    val hist = history("windowFunnel", events, userCol, tsCol, tieCol, steps)
     val init = struct(
       (1 to k).map(i => lit(null).cast("long").as(s"b$i")) ++
         (1 to k).map(i => lit(false).as(s"r$i")): _*)
@@ -232,17 +224,8 @@ object Funnel {
     * Output: (userCol, n_matches). */
   def sequenceCount(events: DataFrame, userCol: String, tsCol: String,
                     tieCol: String, steps: Seq[Column]): DataFrame = {
-    require(steps.nonEmpty, "sequenceCount needs at least one step")
     val k = steps.length
-    val flagged = events.select(
-      col(userCol) +:
-        unix_micros(col(tsCol)).as("ts_us") +:
-        col(tieCol).cast("long").as("tie") +:
-        steps.zipWithIndex.map { case (c, i) => c.as(s"s${i + 1}") }: _*)
-    val hist = flagged.groupBy(userCol)
-      .agg(sort_array(collect_list(struct(
-        col("ts_us") +: col("tie") +:
-          (1 to k).map(i => col(s"s$i")): _*))).as("evs"))
+    val hist = history("sequenceCount", events, userCol, tsCol, tieCol, steps)
     // state: b1..b_{k-1} chain-start registers (the level-k register
     // never survives an event — reaching it IS completion) + count
     val init = struct(

@@ -335,38 +335,6 @@ object Similarity {
     } finally if (doCache) v.unpersist(blocking = false)
   }
 
-  /** E11 (r13): EXACT k-means over the quantized integer grid — the
-    * clustering primitive of embedding-curation pipelines (SemDeDup's
-    * cluster-then-prune, IVF coarse quantizers, cluster-balanced
-    * sampling), made bit-replayable across engines so the WHOLE
-    * assignment is FULL-oracle-checkable, not just a recall contract.
-    *
-    * Replayability design (the q1_agg scaled-integer discipline
-    * applied to Lloyd's loop — float k-means is not oracle-able
-    * because mean reduction order drifts between engines):
-    *  - components quantize to `floor(x · scale)` as integers (double
-    *    multiply + floor are IEEE-identical on both engines);
-    *  - distances compare as EXACT integers: with |q| ≤ ~2·scale the
-    *    squared distance is ≤ dim·(4·scale)² ≈ 2^41 ≪ 2^53, so the
-    *    double dot products compute it exactly — argmin can't drift
-    *    by an ulp;
-    *  - ties break to the LOWEST cid via one packed key
-    *    (dist·k + cid, still exact in double);
-    *  - centroid update is floor(Σq / n) in pure integer arithmetic
-    *    (s − pmod(s, n) is exactly divisible, so any division
-    *    rounding mode agrees); an emptied cluster keeps its previous
-    *    centroid (deterministic, both engines);
-    *  - init = the k lowest-id vectors (cid = id rank).
-    *
-    * Scale shape: assignment is a PROJECTION — k per-centroid literal
-    * dist columns (k here is the small report-cluster count, not the
-    * √n IVF regime; see [[nearestCentroid]] for the fused-matrix form
-    * that regime needs) folded by `least`, zero shuffle. Each update
-    * round is one posexplode hash-agg whose map-side partial folds to
-    * ≤ k·dim groups before the exchange, and the collected model
-    * state is k·dim longs (bounded collect). Total: `rounds` linear
-    * passes over a cached integer table — the Lloyd cost model, with
-    * no per-pair or per-candidate blowup anywhere. */
   /** E13 (r14): EXACT power iteration for the corpus's top principal
     * direction — the PCA-diagnostic of an embedding store (dominant
     * axis, anisotropy screening; the direction mean-centering /
@@ -424,6 +392,38 @@ object Similarity {
       .toDF("pos", "v")
   }
 
+  /** E11 (r13): EXACT k-means over the quantized integer grid — the
+    * clustering primitive of embedding-curation pipelines (SemDeDup's
+    * cluster-then-prune, IVF coarse quantizers, cluster-balanced
+    * sampling), made bit-replayable across engines so the WHOLE
+    * assignment is FULL-oracle-checkable, not just a recall contract.
+    *
+    * Replayability design (the q1_agg scaled-integer discipline
+    * applied to Lloyd's loop — float k-means is not oracle-able
+    * because mean reduction order drifts between engines):
+    *  - components quantize to `floor(x · scale)` as integers (double
+    *    multiply + floor are IEEE-identical on both engines);
+    *  - distances compare as EXACT integers: with |q| ≤ ~2·scale the
+    *    squared distance is ≤ dim·(4·scale)² ≈ 2^41 ≪ 2^53, so the
+    *    double dot products compute it exactly — argmin can't drift
+    *    by an ulp;
+    *  - ties break to the LOWEST cid via one packed key
+    *    (dist·k + cid, still exact in double);
+    *  - centroid update is floor(Σq / n) in pure integer arithmetic
+    *    (s − pmod(s, n) is exactly divisible, so any division
+    *    rounding mode agrees); an emptied cluster keeps its previous
+    *    centroid (deterministic, both engines);
+    *  - init = the k lowest-id vectors (cid = id rank).
+    *
+    * Scale shape: assignment is a PROJECTION — k per-centroid literal
+    * dist columns (k here is the small report-cluster count, not the
+    * √n IVF regime; see [[nearestCentroid]] for the fused-matrix form
+    * that regime needs) folded by `least`, zero shuffle. Each update
+    * round is one posexplode hash-agg whose map-side partial folds to
+    * ≤ k·dim groups before the exchange, and the collected model
+    * state is k·dim longs (bounded collect). Total: `rounds` linear
+    * passes over a cached integer table — the Lloyd cost model, with
+    * no per-pair or per-candidate blowup anywhere. */
   def kmeansExact(vecs: DataFrame, idCol: String, vecCol: String,
                   k: Int = 8, rounds: Int = 3,
                   scale: Int = 10000): DataFrame = {
@@ -726,14 +726,6 @@ object Similarity {
     B.column(graft.functions.PqReconNorm(B.expression(codes), cbs))
   }
 
-  /** Bounded per-query top-m shortlist aggregate — EXACTLY the rows of
-    * `row_number().over(partitionBy(q).orderBy(score desc, id asc))
-    * <= m`, but as a capacity-m heap ([[graft.functions.TopKPairs]])
-    * that partial-aggregates map-side instead of sorting each query's
-    * full candidate pool (VERDICT r12 #3). */
-  private def topkPairsCol(score: Column, id: Column, m: Int): Column =
-    Sketches.topkPairsCol(score, id, m)
-
   /** E10: IVF-PQ approximate top-k (Jégou et al. 2011) — the
     * published 100-TB ANN memory posture (VERDICT r11 #4). Same
     * coarse quantizer + probing as [[ivfTopK]], but the SCORED
@@ -816,7 +808,7 @@ object Similarity {
         // heap dies in the map-side partial, so the q_id exchange
         // carries ≤ m rows per query per map partition, not the pool.
         val short = cand.groupBy("q_id")
-          .agg(topkPairsCol(col("approx"), col("id"),
+          .agg(Sketches.topkPairsCol(col("approx"), col("id"),
             refineFactor * k).as("picks"))
           .select(col("q_id"), explode(col("picks.id")).as("vec_id"))
         // query vectors rejoin via broadcast (|queries| rows — the

@@ -631,13 +631,9 @@ object Sketches {
     * n+1 hashes (a count_distinct plans an unbounded (key, value)
     * de-dup exchange; this answers "distinct, capped at N" — the
     * reference's uniqUpTo — in one bounded aggregation). */
-  def uniqUpToCol(value: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.catalyst.expressions.{If, IsNull, Literal, XxHash64}
-    val v = exprOf(value)
-    val hashed = If(IsNull(v), Literal(null,
-      org.apache.spark.sql.types.LongType), XxHash64(Seq(v), 42L))
-    colOf(graft.functions.UniqUpTo(hashed, n).toAggregateExpression())
-  }
+  def uniqUpToCol(value: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
+    colOf(graft.functions.UniqUpTo(
+      graft.GraftExtensions.hashedOrNull(exprOf(value)), n).toAggregateExpression())
 
   /** [[uniqUpToCol]] as a one-shot grouped frame. */
   def uniqUpTo(df: DataFrame, keyCols: Seq[String], valueCol: String,
@@ -689,19 +685,13 @@ object Sketches {
   // heavy-hitter list, CMS = arbitrary-item frequency. Same landed-
   // state lifecycle as distinctState/mergeDistinctStates.
 
-  private def hashedOrNull(value: org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.catalyst.expressions.{If, IsNull, Literal, XxHash64}
-    val v = exprOf(value)
-    If(IsNull(v), Literal(null,
-      org.apache.spark.sql.types.LongType), XxHash64(Seq(v), 42L))
-  }
-
   /** Aggregate Column: count-min state bytes of `value` (nulls are
     * not items). `width` a power of two; error ≤ ~e·N/width with
     * prob 1−exp(−depth) per query, overestimate-only always. */
   def cmsStateCol(value: org.apache.spark.sql.Column, depth: Int = 4,
                   width: Int = 8192): org.apache.spark.sql.Column =
-    colOf(graft.functions.CountMinAgg(hashedOrNull(value), depth, width)
+    colOf(graft.functions.CountMinAgg(
+      graft.GraftExtensions.hashedOrNull(exprOf(value)), depth, width)
       .toAggregateExpression())
 
   /** Per-key count-min states — the land-able daily shape. */
@@ -722,5 +712,6 @@ object Sketches {
   /** Point estimate of `item`'s frequency from a state column. */
   def cmsEstimate(state: org.apache.spark.sql.Column,
                   item: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    colOf(graft.functions.CountMinEstimate(exprOf(state), hashedOrNull(item)))
+    colOf(graft.functions.CountMinEstimate(exprOf(state),
+      graft.GraftExtensions.hashedOrNull(exprOf(item))))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.graftprobe.ListenerDrain
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.operators.Multimodal
 import graft.streaming.CdcStream
 
@@ -22,9 +22,9 @@ import graft.streaming.CdcStream
   */
 object PipelineQueries extends QueryPack {
 
-  // unique memory-sink names for stream_progress across warmup/timed
-  // runs in one JVM (a reused name would re-register the same table)
-  private val progressId = new java.util.concurrent.atomic.AtomicLong(0)
+  // unique memory-sink names across warmup/timed runs in one JVM (a
+  // reused name would re-register the same table)
+  private val sinkId = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The month-partitioned landing tree for `dir`, streamed once per
     * JVM (shared by stream_land_monthly + storage_stats — one landing,
@@ -133,7 +133,7 @@ object PipelineQueries extends QueryPack {
     // over the static file set).
     "stream_event_counts" -> ((s, dir) => {
       val agg = CdcStream.eventCounts(CdcStream.readEvents(s, dir))
-      runRightSized(s, agg, OutputMode.Complete())
+      s.table(streamToMemory(s, agg, OutputMode.Complete()))
         .select(
           unix_micros(col("window.start")).as("day_us"),
           col("event_type"), col("cnt"), col("sum_value"))
@@ -164,7 +164,7 @@ object PipelineQueries extends QueryPack {
       // distinct count on the materialized result
       val agg = typed.groupBy(col("event_type").as("op"), col("entity_id"))
         .agg(count(lit(1)).as("cnt"))
-      runRightSized(s, agg, OutputMode.Complete())
+      s.table(streamToMemory(s, agg, OutputMode.Complete()))
         .groupBy("op")
         .agg(sum(col("cnt")).as("cnt"), count(lit(1)).as("n_entities"))
         .orderBy("op")
@@ -180,15 +180,8 @@ object PipelineQueries extends QueryPack {
       import s.implicits._
       val c = graft.streaming.Progress.attach(s)
       try {
-        val name = s"graft_progress_${progressId.incrementAndGet()}"
-        GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> StatefulWidth) {
-          val q = CdcStream.eventCounts(CdcStream.readEvents(s, dir))
-            .writeStream.format("memory").queryName(name)
-            .outputMode(OutputMode.Complete())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        val name = streamToMemory(s,
+          CdcStream.eventCounts(CdcStream.readEvents(s, dir)), OutputMode.Complete())
         // listener delivery is async, but every progress event was
         // posted to the listener bus before the query terminated
         ListenerDrain(s)
@@ -210,9 +203,10 @@ object PipelineQueries extends QueryPack {
       // batch advancing the watermark after the last data batch — pin
       // the conf (its default) for the run rather than inherit
       // whatever the host session was configured with
-      val agg = CdcStream.eventCountsWatermarked(
-        CdcStream.readEvents(s, dir), delay = "1 day")
-      runRightSized(s, agg, OutputMode.Append(), NoDataBatches -> "true")
+      // slide = size: tumbling 1-day windows
+      val agg = CdcStream.eventCountsSliding(CdcStream.readEvents(s, dir),
+        size = "1 day", slide = "1 day", delay = "1 day")
+      s.table(streamToMemory(s, agg, OutputMode.Append(), NoDataBatches -> "true"))
         .select(
           unix_micros(col("window.start")).as("day_us"),
           col("event_type"), col("cnt"), col("sum_value"))
@@ -229,7 +223,7 @@ object PipelineQueries extends QueryPack {
       val agg = CdcStream.eventCountsSliding(
         CdcStream.readEvents(s, dir), size = "6 hours",
         slide = "3 hours", delay = "1 day")
-      runRightSized(s, agg, OutputMode.Append(), NoDataBatches -> "true")
+      s.table(streamToMemory(s, agg, OutputMode.Append(), NoDataBatches -> "true"))
         .select(
           unix_micros(col("window.start")).as("win_us"),
           col("event_type"), col("cnt"), col("sum_value"))
@@ -255,9 +249,7 @@ object PipelineQueries extends QueryPack {
       val landed = Staging.once("sess_stream", dir) { p =>
         val agg = CdcStream.sessionize(CdcStream.readEvents(s, dir),
           gap = "30 minutes", delay = "1 day")
-        GraftSession.withConf(s, NoDataBatches -> "true") {
-          CdcStream.runToParquet(agg, p)
-        }
+        CdcStream.runToParquet(agg, p, NoDataBatches -> "true")
       }
       s.read.parquet(s"$landed/out")
         .select(col("user_id"),
@@ -552,7 +544,7 @@ object PipelineQueries extends QueryPack {
         newer = (a, b) =>
           a.ts_us > b.ts_us || (a.ts_us == b.ts_us && a.event_id > b.event_id),
         eventTimeUs = _.ts_us, ttlMs = 7L * 24 * 3600 * 1000).toDF()
-      runRightSized(s, updates, OutputMode.Update())
+      s.table(streamToMemory(s, updates, OutputMode.Update()))
         .groupBy("user_id")
         .agg(max_by(
           struct(col("ts_us"), col("event_id"), col("event_type"), col("value")),
@@ -591,7 +583,7 @@ object PipelineQueries extends QueryPack {
         evs, _.source_id,
         newer = (a, b) => a.ts_us > b.ts_us ||
           (a.ts_us == b.ts_us && a.event_id.toLong > b.event_id.toLong)).toDF()
-      runRightSized(s, updates, OutputMode.Update())
+      s.table(streamToMemory(s, updates, OutputMode.Update()))
         .groupBy("source_id")
         .agg(max_by(
           struct(col("ts_us"), col("event_id"), col("target_id"), col("rel_type")),
@@ -614,7 +606,7 @@ object PipelineQueries extends QueryPack {
           col("user_id"), col("event_type"), col("value"))
         .as[CdcStream.Ev]
       val updates = CdcStream.latestState(evs).toDF()
-      runRightSized(s, updates, OutputMode.Update())
+      s.table(streamToMemory(s, updates, OutputMode.Update()))
         .groupBy("user_id")
         .agg(max_by(
           struct(col("ts_us"), col("event_id"), col("event_type"), col("value")),
@@ -643,7 +635,7 @@ object PipelineQueries extends QueryPack {
           _.event_type == "purchase"),
         windowMicros = 4L * 3600 * 1000000)
         .toDF("user_id", "level")
-      val lv = runRightSized(s, levels, OutputMode.Update())
+      val lv = s.table(streamToMemory(s, levels, OutputMode.Update()))
         .groupBy("user_id").agg(max(col("level")).as("level"))
       Tables.load(s, dir, "events").select(col("user_id")).distinct()
         .join(lv, Seq("user_id"), "left")
@@ -667,7 +659,7 @@ object PipelineQueries extends QueryPack {
           col("c_mktsegment").as("segment"))
       val agg = CdcStream.enrichCounts(
         CdcStream.readEvents(s, dir), dim, "user_id", "segment")
-      runRightSized(s, agg, OutputMode.Complete())
+      s.table(streamToMemory(s, agg, OutputMode.Complete()))
         .orderBy("segment", "event_type")
     }),
 
@@ -705,7 +697,7 @@ object PipelineQueries extends QueryPack {
       // watermark advance, so the emitted set is identical (the
       // oracle pins it). Production keeps session defaults; the
       // bounded-delay eviction behavior stays spec'd in PipelineSpec.
-      runRightSized(s, joined, OutputMode.Append(), NoDataBatches -> "false")
+      s.table(streamToMemory(s, joined, OutputMode.Append(), NoDataBatches -> "false"))
         .orderBy("click_id", "purchase_id")
     }),
 
@@ -713,7 +705,7 @@ object PipelineQueries extends QueryPack {
     // clicks got NO purchase within 30 minutes" (VERDICT r11 #7).
     // Inner pairs emit on match exactly as H18; NULL-padded rows for
     // unmatched clicks emit only when the global watermark passes
-    // click.ts + 30min (CdcStream.intervalJoinLeft scaladoc), so the
+    // click.ts + 30min (CdcStream.intervalJoin scaladoc), so the
     // verification pins delay = 0 and KEEPS the no-data final batch
     // (it IS the watermark advance that flushes the NULL rows — the
     // opposite trade from H18's inner-only run). The oracle replays
@@ -728,13 +720,13 @@ object PipelineQueries extends QueryPack {
         .select(col("event_id").as("click_id"), col("ts"), col("user_id"))
       val purchases = evs.filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("ts"), col("user_id"))
-      val joined = CdcStream.intervalJoinLeft(clicks, purchases, "user_id",
-        within = "30 minutes", delay = "0 seconds")
+      val joined = CdcStream.intervalJoin(clicks, purchases, "user_id",
+        within = "30 minutes", delay = "0 seconds", joinType = "left_outer")
         .select(col("click_id"), col("purchase_id"),
           col("l.user_id").as("user_id"),
           unix_micros(col("l.ts")).as("click_us"),
           unix_micros(col("r.ts")).as("purchase_us"))
-      runRightSized(s, joined, OutputMode.Append())
+      s.table(streamToMemory(s, joined, OutputMode.Append()))
         .orderBy("click_id", "purchase_id")
     })
   )
@@ -756,19 +748,27 @@ object PipelineQueries extends QueryPack {
     * the watermark past the last data batch. */
   private final val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-  /** [[CdcStream.runToMemory]] under [[StatefulWidth]] and `conf` —
-    * both are captured at query start, so the confs wrap the
-    * start/await and are restored after it. */
-  private def runRightSized(s: org.apache.spark.sql.SparkSession,
-                            df: org.apache.spark.sql.DataFrame,
-                            mode: OutputMode,
-                            conf: (String, String)*): org.apache.spark.sql.DataFrame =
-    GraftSession.withConf(s, ("spark.sql.shuffle.partitions" -> StatefulWidth) +: conf: _*) {
-      CdcStream.runToMemory(df, mode)
+  /** Run `df` to completion into a memory sink under
+    * [[StatefulWidth]] and `conf` (both captured at query start), and
+    * return the sink's table name, which also names the query. The
+    * checkpoint is a staging dir fresh on every call and deleted once
+    * the query has terminated: an AvailableNow restart on a reused
+    * checkpoint sees no new data, so a timed run would read an empty
+    * table. */
+  private def streamToMemory(s: org.apache.spark.sql.SparkSession,
+                             df: org.apache.spark.sql.DataFrame,
+                             mode: OutputMode, conf: (String, String)*): String = {
+    val name = s"graft_stream_${sinkId.incrementAndGet()}"
+    Staging.scratch("stream_ckpt", name) { ckpt =>
+      CdcStream.runAvailableNow(df, ckpt, Some(name),
+        ("spark.sql.shuffle.partitions" -> StatefulWidth) +: conf)(
+        _.format("memory").outputMode(mode))
     }
+    name
+  }
 
   /** Entries whose timed path starts the streaming engine each run
-    * (runToMemory / a fresh query). The landed-store entries
+    * (streamToMemory). The landed-store entries
     * (stream_jdbc_land, stream_land_monthly, storage_stats, stream_scd2,
     * and since r10 stream_sessionize / stream_dedup_exact — their
     * row-scaled output moved from the memory sink to parquet landings)

@@ -58,7 +58,7 @@ object SketchQueries extends QueryPack {
         .select(
           when(col("i") % 10 === 0, col("i")).otherwise(col("j")).as("i"),
           when(col("i") % 10 === 0, col("j")).otherwise(col("i")).as("j"))
-      recallRow(inc, exactCross, minRecall = 0.7)
+      Planted.recallRow(inc, exactCross, minRecall = 0.7)
     }),
 
     // E2: random-hyperplane LSH ANN, auto-scaled tables × bits with
@@ -155,7 +155,7 @@ object SketchQueries extends QueryPack {
       val got = Similarity.ivfPqTopK(Tables.load(s, dir, "embeddings"),
           "vec_id", "embedding")
         .select(col("q_id").as("i"), col("vec_id").as("j"))
-      recallRow(got, plantedAnnPairs(s, dir), minRecall = 0.8)
+      Planted.recallRow(got, plantedAnnPairs(s, dir), minRecall = 0.8)
     }),
 
     // E3/E2 planted twins (r13 — VERDICT r12 #7, the sim_ivfpq
@@ -173,13 +173,13 @@ object SketchQueries extends QueryPack {
       val got = Similarity.ivfTopK(Tables.load(s, dir, "embeddings"),
           "vec_id", "embedding")
         .select(col("q_id").as("i"), col("vec_id").as("j"))
-      recallRow(got, plantedAnnPairs(s, dir), minRecall = 0.8)
+      Planted.recallRow(got, plantedAnnPairs(s, dir), minRecall = 0.8)
     }),
     "sim_lsh_ann_planted_check" -> ((s, dir) => {
       val got = Similarity.lshTopK(Tables.load(s, dir, "embeddings"),
           "vec_id", "embedding")
         .select(col("q_id").as("i"), col("vec_id").as("j"))
-      recallRow(got, plantedAnnPairs(s, dir), minRecall = 0.7)
+      Planted.recallRow(got, plantedAnnPairs(s, dir), minRecall = 0.7)
     }),
 
     // E9 planted twin (r15 — VERDICT r14 #3, the last ANN entry whose
@@ -196,7 +196,7 @@ object SketchQueries extends QueryPack {
       val got = Similarity.ivfTopK(Tables.load(s, dir, "embeddings"),
           "vec_id", "embedding", filterCol = Some("label"))
         .select(col("q_id").as("i"), col("vec_id").as("j"))
-      recallRow(got, plantedAnnPairs(s, dir), minRecall = 0.8)
+      Planted.recallRow(got, plantedAnnPairs(s, dir), minRecall = 0.8)
     }),
 
     // D5-at-scale: embedding near-dup pairs via LSH candidates + exact
@@ -248,7 +248,7 @@ object SketchQueries extends QueryPack {
       val sem = graft.operators.Dedup.semanticPairs(emb, "vec_id",
         "embedding", tau = 0.9,
         k = graft.operators.Similarity.autoCentroids(emb.count()))
-      recallRow(sem, planted, minRecall = 0.8)
+      Planted.recallRow(sem, planted, minRecall = 0.8)
     }),
 
     // D6 contract check (oracle-backed): every LSH pair must appear in
@@ -295,7 +295,7 @@ object SketchQueries extends QueryPack {
             col("a.nrm"), col("b.nrm")).as("cosine"))
         .filter(col("cosine") >= 0.9)
       val lsh = Dedup.embeddingPairsLsh(emb, "vec_id", "embedding", tau = 0.9)
-      recallRow(lsh, planted, minRecall = 0.8)
+      Planted.recallRow(lsh, planted, minRecall = 0.8)
     }),
 
     // E2 contract check: recall@10 of the LSH ANN vs the exact
@@ -321,7 +321,7 @@ object SketchQueries extends QueryPack {
     "dedup_minhash_lsh_check" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       val mh = Sketches.minhashLsh(docs, "doc_id", "text")
-      recallRow(mh, exactJaccard(s, dir), minRecall = 0.7)
+      Planted.recallRow(mh, exactJaccard(s, dir), minRecall = 0.7)
     }),
 
     // D4 contract check: SimHash hamming-band pairs vs the same exact
@@ -332,7 +332,7 @@ object SketchQueries extends QueryPack {
     "dedup_simhash_check" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       val sh = Sketches.simhashPairs(docs, "doc_id", "text")
-      recallRow(sh, exactJaccard(s, dir), minRecall = 0.4)
+      Planted.recallRow(sh, exactJaccard(s, dir), minRecall = 0.4)
     }),
 
     // D3 contract at 100×-scale packs (r11, VERDICT r10 #1): MinHash-
@@ -344,7 +344,7 @@ object SketchQueries extends QueryPack {
     // trivial regime shown honestly.
     "dedup_minhash_planted_check" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      recallRow(Sketches.minhashLsh(docs, "doc_id", "text"),
+      Planted.recallRow(Sketches.minhashLsh(docs, "doc_id", "text"),
         Planted.ngramTruth(docs, n = 3, tau = 0.7, dfCap = 1000L),
         minRecall = 0.7)
     }),
@@ -361,7 +361,7 @@ object SketchQueries extends QueryPack {
     // planted scale point).
     "dedup_simhash_planted_check" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      recallRow(Sketches.simhashPairs(docs, "doc_id", "text"),
+      Planted.recallRow(Sketches.simhashPairs(docs, "doc_id", "text"),
         Planted.tierPairs(docs, sel = 23),
         minRecall = 0.7)
     }),
@@ -383,7 +383,7 @@ object SketchQueries extends QueryPack {
         pmod(col("doc_id"), lit(1000000000L)) >= lit(Planted.Off)
       val inc = Sketches.minhashLshAgainst(
         docs.filter(isPlant), docs.filter(!isPlant), "doc_id", "text")
-      recallRow(inc.select(col("j").as("i"), col("i").as("j")),
+      Planted.recallRow(inc.select(col("j").as("i"), col("i").as("j")),
         Planted.ngramTruth(docs, n = 3, tau = 0.7, dfCap = 1000L),
         minRecall = 0.7)
     }),
@@ -776,13 +776,6 @@ object SketchQueries extends QueryPack {
         maxRows = graft.operators.Guard.envMaxRows(),
         allowAllPairs = graft.operators.Guard.envAllow)
     }
-
-  /** One-row recall verdict for sketches whose ground truth IS
-    * SQL-expressible: (exact_pairs, recall_ok) on (i, j) pair ids. */
-  // one-row recall verdict — shared with the planted text checks
-  private def recallRow(got: DataFrame, exact: DataFrame,
-                        minRecall: Double): DataFrame =
-    Planted.recallRow(got, exact, minRecall)
 
   /** cdc_topk_state_check body, capacity-parameterized so the spec can
     * drive BOTH regimes with a tiny cap (the entry pins 32768).

@@ -77,6 +77,16 @@ private[queries] object Staging {
     p
   }
 
+  /** [[path]]`(kind, key)` for the span of `f` only: emptied before
+    * `f` runs and deleted once it returns or throws. A `key` no other
+    * call of this JVM uses gives every call a fresh dir. */
+  def scratch[T](kind: String, key: String)(f: String => T): T = {
+    val p = path(kind, key)
+    val dir = new java.io.File(p)
+    deleteRecursively(dir)
+    try f(p) finally deleteRecursively(dir)
+  }
+
   def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString

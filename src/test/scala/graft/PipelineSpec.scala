@@ -203,6 +203,45 @@ class PipelineSpec extends SparkSpec {
     assert(batch.exceptAll(streamed.select("day_us", "event_type", "cnt")).count() == 0)
   }
 
+  test("memory-sink read-back: fresh checkpoint per call, none left behind") {
+    import java.nio.file.{FileSystems, Paths, StandardWatchEventKinds => Kind}
+    import scala.jdk.CollectionConverters._
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    // the read-back's own checkpoint: a staging dir of this process
+    val own = "graft_staging_stream_ckpt_"
+    val pid = ProcessHandle.current().pid()
+    def ownLeft = Option(tmp.toFile.list()).toSeq.flatten
+      .filter(n => n.startsWith(own) && n.endsWith(s"_$pid"))
+    val watch = FileSystems.getDefault.newWatchService()
+    tmp.register(watch, Kind.ENTRY_CREATE)
+    try {
+      val total = Tables.load(spark, sfDir, "events").count()
+      val runs = (1 to 2).map { _ =>
+        val rows = SparkEntry.queries("stream_event_counts")(spark, sfDir)
+          .collect().toSeq
+        assert(ownLeft.isEmpty, "checkpoint dir outlived its query")
+        rows
+      }
+      // a reused AvailableNow checkpoint would hand the second call an
+      // empty table
+      assert(runs.head.map(_.getAs[Long]("cnt")).sum == total)
+      assert(runs(1) == runs.head)
+      // every entry made in tmpdir during the calls, including ones
+      // deleted again: Spark removes its own temporary-<uuid>
+      // checkpoint on a clean stop, but not after a kill
+      val made = Iterator.continually(watch.poll(1, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(_ != null)
+        .flatMap { key =>
+          val evs = key.pollEvents().asScala.toList
+          key.reset()
+          evs.filter(_.kind == Kind.ENTRY_CREATE).map(_.context.toString)
+        }.toSet
+      assert(!made.exists(_.startsWith("temporary-")),
+        s"Spark made its own checkpoint: $made")
+      assert(made.exists(_.startsWith(own)), made)
+    } finally watch.close()
+  }
+
   test("generic latestBy runs the relationship stream (second CDC stream)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -239,7 +278,8 @@ class PipelineSpec extends SparkSpec {
     val stream = mem.toDS()
       .select(expr("timestamp_micros(ts_us)").as("ts"),
         col("event_type"), col("value"))
-    val q = CdcStream.eventCountsWatermarked(stream, "1 day")
+    val q = CdcStream.eventCountsSliding(stream, size = "1 day",
+        slide = "1 day", delay = "1 day")
       .writeStream.format("memory").queryName("pipelinespec_wm")
       .outputMode(OutputMode.Append()).start()
     val us = 1000000L
@@ -744,8 +784,8 @@ class PipelineSpec extends SparkSpec {
     val purchases = rMem.toDS()
       .select(col("event_id").as("purchase_id"),
         expr("timestamp_micros(ts_us)").as("ts"), col("user_id"))
-    val joined = CdcStream.intervalJoinLeft(clicks, purchases, "user_id",
-      within = "30 minutes", delay = "1 hour")
+    val joined = CdcStream.intervalJoin(clicks, purchases, "user_id",
+      within = "30 minutes", delay = "1 hour", joinType = "left_outer")
       .select(col("click_id"), col("purchase_id"))
     val q = joined.writeStream.format("memory")
       .queryName("pipelinespec_ivjl")
@@ -795,8 +835,8 @@ class PipelineSpec extends SparkSpec {
     val purchases = rMem.toDS()
       .select(col("event_id").as("purchase_id"),
         expr("timestamp_micros(ts_us)").as("ts"), col("user_id"))
-    val joined = CdcStream.intervalJoinLeft(clicks, purchases, "user_id",
-      within = "30 minutes", delay = "0 seconds")
+    val joined = CdcStream.intervalJoin(clicks, purchases, "user_id",
+      within = "30 minutes", delay = "0 seconds", joinType = "left_outer")
       .select(col("click_id"), col("purchase_id"))
     val q = joined.writeStream.format("memory")
       .queryName("pipelinespec_ivjl_boundary")

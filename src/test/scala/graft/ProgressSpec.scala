@@ -58,8 +58,9 @@ class ProgressSpec extends SparkSpec {
     val c = Progress.attach(spark)
     try {
       val mem = MemoryStream[CdcStream.Ev]
-      val counts = CdcStream.eventCountsWatermarked(
-        mem.toDF().withColumn("ts", timestamp_micros(col("ts_us"))), "1 hour")
+      val counts = CdcStream.eventCountsSliding(
+        mem.toDF().withColumn("ts", timestamp_micros(col("ts_us"))),
+        size = "1 day", slide = "1 day", delay = "1 hour")
       val q = counts.writeStream.format("memory").queryName("progressspec_wm")
         .outputMode(OutputMode.Append()).start()
       val hourUs = 3600L * 1000000L

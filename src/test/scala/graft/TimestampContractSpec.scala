@@ -97,13 +97,9 @@ class TimestampContractSpec extends SparkSpec {
 
   test("streaming eventCounts identical across representations") {
     val results = allDirs.map { case (name, dir) =>
-      val agg = streaming.CdcStream.eventCounts(
-        streaming.CdcStream.readEvents(spark, dir))
-      name -> streaming.CdcStream
-        .runToMemory(agg, org.apache.spark.sql.streaming.OutputMode.Complete())
-        .select(unix_micros(col("window.start")).as("day_us"),
-          col("event_type"), col("cnt"), col("sum_value"))
-        .orderBy("day_us", "event_type").collect().toSeq
+      // (day_us, event_type, cnt, sum_value) through the streaming engine
+      name -> SparkEntry.queries("stream_event_counts")(spark, dir)
+        .collect().toSeq
     }
     val (refName, ref) = results.head
     results.tail.foreach { case (name, rows) =>
