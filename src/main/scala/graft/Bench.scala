@@ -79,10 +79,11 @@ object Bench {
       // zero and would read as the fastest query in the bench JSON
       if (err.isEmpty) Some(name -> adjudicated) else None
     }.flatten
-    // End-of-pass cache hygiene (VERDICT r9 #7): plan-keyed cache
-    // entries are deliberately shared across entries within the pass
-    // (releasing per entry would forfeit the reuse AND distort the
-    // timings); the pass owns the cache, so it releases once, here.
+    // End-of-pass cache hygiene (VERDICT r9 #7): entries pin outside
+    // any `Pins.scoped` scope, so the pass owns every pin, and the
+    // plan-keyed cache entries are deliberately shared across entries
+    // within the pass (releasing per entry would forfeit the reuse AND
+    // distort the timings); the pass releases once, here.
     spark.catalog.clearCache()
     import Verify.{jsonString => jq}
     val qs = results.map { case (k, ts) => s"${jq(k)}:${ts.min}" }.mkString("{", ",", "}")

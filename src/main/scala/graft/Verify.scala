@@ -36,12 +36,13 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // End-of-pass cache hygiene (VERDICT r9 #7): operators pin
-    // loop-invariant relations with caller-owned cleanup, and across
-    // a full pack the plan-keyed entries are deliberately REUSED
-    // between entries sharing a graph (scoping the release per entry
-    // would forfeit that). The pass is the owner, so it releases
-    // everything once, here — zero residual cached relations.
+    // End-of-pass cache hygiene (VERDICT r9 #7): entries build their
+    // operators outside any `Pins.scoped` scope, so every pin they
+    // leave is a plain persist the pass owns, and across a full pack the
+    // plan-keyed entries are deliberately REUSED between entries
+    // sharing an input (scoping the release per entry would forfeit
+    // that). The pass releases everything once, here — zero residual
+    // cached relations.
     spark.catalog.clearCache()
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected(k) }

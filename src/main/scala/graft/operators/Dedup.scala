@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
+import Pins.pin
+
 /** SURVEY §2.D — deduplication family for the LLM-data pipeline.
   *
   * Scale stance (100 TB): nothing here is O(n²) except the *exact*
@@ -14,6 +16,8 @@ import graft.functions.VectorFunctions
   * (inverted-index token / LSH band / hamming band), with a document-
   * frequency cap bounding the worst bucket (stop-shingle skew) — the
   * same trick as stop-word removal in classic near-dup pipelines.
+  * Multi-consumer relations are pinned through [[Pins.pin]] (cache
+  * lifetime: its scaladoc).
   */
 object Dedup {
 
@@ -276,11 +280,10 @@ object Dedup {
                                          dfCap: Long): (DataFrame, DataFrame) = {
     // widen + materialized token attribute (TextOps.withTokens — the
     // ngrams caller contract) before the shingle explode
-    val sh = TextOps.withTokens(docs, textCol, Seq(col(idCol).as("doc_id")))
+    val sh = pin(TextOps.withTokens(docs, textCol, Seq(col(idCol).as("doc_id")))
       .select(col("doc_id"),
         explode(TextOps.shingles(col("graft_toks"), n)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), xxhash64(col("s")).as("tok")))
     // TWO-PASS df cap ([[Skew.capHotKeys]]): tokens over the cap are
     // dropped BEFORE any posting list is collected, so every
     // collect_list buffer is bounded by dfCap rows by construction —
@@ -293,9 +296,7 @@ object Dedup {
     // the capped STREAM, not by re-exploding the posting lists:
     // shingles are distinct per doc, so the two are equal — and this
     // skips a second pass over the collected lists.
-    val sizes = capped
-      .groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = pin(capped.groupBy("doc_id").agg(count(lit(1)).as("sz")))
     (capped, sizes)
   }
 
@@ -308,21 +309,12 @@ object Dedup {
 
   private def pairSizesFrom(capped: DataFrame,
                             sizes: DataFrame): DataFrame = {
-    // the capped semi-join output is already partitioned by tok, so
-    // the posting aggregation adds no exchange
-    val postings = capped
-      .groupBy("tok")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select("ds")
-    // pairwise combinations within each (bounded-size) posting list —
-    // candidate pairs share ≥1 shingle by construction, so intersection
-    // size = number of posting lists containing the pair. Two native
-    // explodes + a filter (codegen'd GenerateExec) beat an interpreted
-    // nested-lambda combination builder.
-    val inter = postings
-      .select(explode(col("ds")).as("i"), col("ds"))
-      .select(col("i"), explode(col("ds")).as("j"))
-      .where(col("i") < col("j"))
+    // pairwise combinations within each (bounded-size) posting list
+    // (the capped semi-join output is already partitioned by tok, so
+    // the posting aggregation adds no exchange) — candidate pairs
+    // share ≥1 shingle by construction, so intersection size = number
+    // of posting lists containing the pair
+    val inter = Sketches.postingPairs(capped, "tok")
       .groupBy("i", "j")
       .agg(count(lit(1)).as("inter"))
     inter
@@ -384,12 +376,11 @@ object Dedup {
     // vecs with 1 probe, ≥ 0.8 with 4) — the same soft-assignment fix
     // IVF search uses (nprobe). Pair cost multiplies by ≤ probes per
     // side; duplicates from shared probes collapse in the distinct.
-    val v = Par.widen(vecs).select(col(idCol).as("id"),
+    val v = pin(Par.widen(vecs).select(col(idCol).as("id"),
         VectorFunctions.asDouble(col(vecCol)).as("v"))
       .withColumn("cid", explode(
         Similarity.nearestCentroid(col("v"), centroids, probes)))
-      .withColumn("nrm", VectorFunctions.l2(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("nrm", VectorFunctions.l2(col("v"))))
     val a = v.select(col("cid"), col("id").as("i"), col("v").as("va"),
       col("nrm").as("na"))
     val b = v.select(col("cid"), col("id").as("j"), col("v").as("vb"),
@@ -498,10 +489,9 @@ object Dedup {
     // persist the pre-explode hashed form — the tables·bits·dim
     // sign-hash otherwise recomputes once per cap branch and self-join
     // side (×4); see the matching note in [[Similarity.lshTopK]]
-    val hashed = Par.widen(vecs).select(col(idCol).as("id"),
+    val hashed = pin(Par.widen(vecs).select(col(idCol).as("id"),
         VectorFunctions.asDouble(col(vecCol)).as("v"))
-      .select(col("id"), Similarity.bucketKeys(col("v"), planes).as("bks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), Similarity.bucketKeys(col("v"), planes).as("bks")))
     val keyed = hashed.select(col("id"), explode(col("bks")).as("bk"))
     // candidate pairs carry ONLY ids through the bucket join and the
     // multi-table dedup: the distinct shuffles 16-byte (i, j) pairs,

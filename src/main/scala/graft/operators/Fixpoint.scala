@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * convergence loop of the fixpoint operators ([[GraphOps.kCore]],
   * [[GraphOps.coreness]], [[GraphOps.trussEdges]],
   * [[PipelineOps.dedupClusters]]) and [[rounds]], the fixed-round
-  * runner of the other `GraphOps` loops over DataFrame state.
+  * runner of the other `GraphOps` loops over DataFrame state and of
+  * [[Lttb.exact]]'s per-bucket picks.
   *
   * Each round's output is checkpointed (lineage truncation, the
   * iterative-plan discipline) and its convergence statistic — a row
@@ -26,7 +27,7 @@ import org.apache.spark.sql.functions._
   * same count) and hands each round every state so far, so one runner
   * serves the fixed-round loops (which keep the last state), the
   * accumulating ones (FastRP's weighted sum, the walk trace, the
-  * sampled hops, built from the returned states) and the frontier
+  * sampled hops, the LTTB picks, built from the returned states) and the frontier
   * loops (whose settled set is the lazy union of the earlier
   * frontiers). Three loops stay off it:
   *   - [[GraphOps.pageRankWithN]] keeps lazy lineage by design: all

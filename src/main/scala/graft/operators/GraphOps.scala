@@ -2,10 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.util.DynamicVariable
+import Pins.pin
 
 /** Graph algorithms over an edge-list DataFrame — the Neo4j GDS
   * workload class the reference's source system serves (the reference
@@ -26,66 +24,27 @@ import scala.util.DynamicVariable
   * pinning, each round re-runs the upstream edge derivation — the
   * repo-wide caching stance, docs/SCALE.md).
   *
-  * CACHE LIFETIME (ADVICE r8; split tested both ways in r9):
-  * LOOP-INVARIANT relations (edge lists, degrees, node tables) use
-  * `persist(MEMORY_AND_DISK)` — with a disk-backed level, memory
-  * eviction SPILLS the blocks, it does not trigger recompute, and
-  * plan-keyed CacheManager entries are shared across repeated builds
-  * of the same graph (an r9 experiment that localCheckpoint'ed these
-  * instead paid the full invariant materialization on every
-  * execution — 4-6× on the 100× full-supply-graph entries — for no
-  * robustness gain, and was reverted). Cleanup of these entries is
-  * CALLER-OWNED, the sketch-operator contract (docs/SCALE.md
-  * "caching stance"): the operator itself cannot unpersist them
-  * without forcing execution, since the returned lazy plan still
-  * references them. Pins are SCOPED, not registered globally:
-  * [[materialized]] evaluates an operator build inside a pin scope,
-  * checkpoints the result and releases exactly the pins that build
-  * made; a pin made outside any scope is a plain persist the caller
-  * reclaims (`unpersist`, or `spark.catalog.clearCache()` once it has
-  * materialized). A build on another thread has its own scope. LOOP-SCOPED
-  * STATE (each round's ranks/labels/frontier, and the HITS vectors
-  * whose lazy tree otherwise doubles per half-step) is
-  * `localCheckpoint`ed by the round runner — lineage truncation is
-  * what iterative plans need. The runner hands every round the states
-  * before it, so they stay referenced until the operator's build
-  * returns; the ContextCleaner reclaims them once it drops them.
+  * Cache lifetime: loop-invariant relations are pinned through
+  * [[Pins.pin]] (the contract is in its scaladoc); loop-scoped state is
+  * checkpointed by the round runner.
   */
 object GraphOps {
 
-  /** The pins of the [[materialized]] build running on this thread
-    * (None outside any build). */
-  private val pinScope =
-    new DynamicVariable[Option[ConcurrentLinkedQueue[DataFrame]]](None)
-
-  /** Persist a loop-invariant relation. Inside a [[materialized]]
-    * build the scope owns the entry — unless the plan was already
-    * cached, in which case the entry stays with whoever cached it. */
-  private def pin(df: DataFrame): DataFrame = {
-    val fresh = df.storageLevel == StorageLevel.NONE
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if (fresh) pinScope.value.foreach(_.add(p))
-    p
-  }
-
   /** One-shot driver discipline (VERDICT r9 #7): evaluate the operator
-    * build `df` inside a pin scope, MATERIALIZE its result (eager
-    * `localCheckpoint` — executes the plan once and truncates lineage,
-    * so the returned frame no longer references the pinned
-    * invariants), hand the checkpointed result to `use`, then release
-    * exactly the pins that build made (non-blocking unpersist). A full
-    * pass over one-shot entries therefore ends with zero residual
-    * GraphOps cache, and cache the caller owns — including operators
-    * built outside any scope — is untouched. Library callers
-    * composing several graph operators over the same edge relation
+    * build `df` inside a [[Pins.scoped]] scope, MATERIALIZE its result
+    * (eager `localCheckpoint` — executes the plan once and truncates
+    * lineage, so the checkpointed frame no longer references the
+    * pinned invariants), release exactly the pins that build made —
+    * whichever operator made them — and hand the checkpointed result
+    * to `use`. A full pass over one-shot entries therefore ends with
+    * zero residual operator cache, and cache the caller owns —
+    * including operators built outside any scope — is untouched.
+    * Library callers composing several operators over the same input
     * build them OUTSIDE `materialized` — the plan-keyed cache reuse
-    * across calls is the point of the persist contract — and reclaim
-    * with `spark.catalog.clearCache()` once they materialize. */
-  def materialized[T](df: => DataFrame)(use: DataFrame => T): T = {
-    val pins = new ConcurrentLinkedQueue[DataFrame]()
-    try use(pinScope.withValue(Some(pins))(df.localCheckpoint()))
-    finally pins.forEach(_.unpersist(false))
-  }
+    * across calls is the point of the pin contract — and reclaim with
+    * `spark.catalog.clearCache()` once they materialize. */
+  def materialized[T](df: => DataFrame)(use: DataFrame => T): T =
+    use(Pins.scoped(df.localCheckpoint()))
 
   /** Symmetrize a directed edge list (cols `a`, `b`) into the
     * undirected adjacency relation, self-loops dropped, duplicates

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import Pins.pin
 
 /** EXACT `largestTriangleThreeBuckets` (the ClickHouse/LTTB-paper
   * sequential semantics, complementing the order-parallel fixed-anchor
@@ -28,7 +29,9 @@ import org.apache.spark.storage.StorageLevel
   * is representative). Contract: (xCol, yCol) are integral (LongType)
   * — rebase/scale rationals upstream, exactly as `cdc_lttb` does.
   *
-  * Output: keyCols :+ (x, y), the selected points.
+  * Output: keyCols :+ (x, y), the selected points. The candidate
+  * tables are pinned through [[Pins.pin]] (cache lifetime: its
+  * scaladoc).
   */
 object Lttb {
 
@@ -39,11 +42,10 @@ object Lttb {
     val keys = keyCols.map(col)
     val wK = Window.partitionBy(keys: _*)
     val wR = Window.partitionBy(keys: _*).orderBy(col(xCol))
-    val pts = df
+    val pts = pin(df
       .select(keyCols.map(col) :+ col(xCol).as("x") :+ col(yCol).as("y"): _*)
       .withColumn("rn", row_number().over(wR))
-      .withColumn("n", count(lit(1)).over(wK))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("n", count(lit(1)).over(wK)))
     // short series: every point survives
     val short = pts.filter(col("n") <= nOut)
       .select(keys :+ col("x") :+ col("y"): _*)
@@ -54,53 +56,47 @@ object Lttb {
       .select(keys :+ col("x").as("lx") :+ col("y").as("ly"): _*)
     // bucket id over middle points: j = rn − 2 ∈ [0, m), m = n − 2;
     // floor(j·nb/m) is monotone and surjective onto [0, nb) for m ≥ nb
-    val mid = eng.filter(col("rn") > 1 && col("rn") < col("n"))
+    val mid = pin(eng.filter(col("rn") > 1 && col("rn") < col("n"))
       .withColumn("b",
-        least(floor((col("rn") - 2) * nb / (col("n") - 2)), lit((nb - 1).toLong)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        least(floor((col("rn") - 2) * nb / (col("n") - 2)), lit((nb - 1).toLong))))
     val bstats = mid.groupBy(keys :+ col("b"): _*)
       .agg(sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         count(lit(1)).as("c"))
     // next-anchor per bucket: bucket b+1's sums, or the last point
-    val anch = bstats
+    val anch = pin(bstats
       .withColumn("ab", col("b") - 1) // these sums anchor bucket b−1
       .filter(col("ab") >= 0)
       .select(keys :+ col("ab").as("b") :+ col("sx").as("cxs") :+
         col("sy").as("cys") :+ col("c").as("cc"): _*)
       .unionByName(lastPt.select(keys :+ lit((nb - 1).toLong).as("b") :+
-        col("lx").as("cxs") :+ col("ly").as("cys") :+ lit(1L).as("cc"): _*))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        col("lx").as("cxs") :+ col("ly").as("cys") :+ lit(1L).as("cc"): _*)))
     val kNames = keyCols
     // anchors joined onto the candidates ONCE — each step then only
     // joins the (tiny) previous-pick table and filters its bucket
-    val midA = mid.join(anch, kNames :+ "b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var prev = firstPt.select(keys :+ col("fx").as("px") :+ col("fy").as("py"): _*)
-    var picks: Option[DataFrame] = None
+    val midA = pin(mid.join(anch, kNames :+ "b"))
     val wPick = Window.partitionBy(keys: _*).orderBy(col("e").desc, col("x"))
-    for (b <- 0 until nb) {
+    // round t picks bucket t−1's point against the previous pick x_{t−1}
+    // (x₀ = the first point). Each pick feeds the next join AND the
+    // result union, and the chain's nested lineage makes Catalyst
+    // re-optimize an ever-deeper tree (measured: planning, not
+    // execution, dominated the chain) — so the runner's per-round
+    // localCheckpoint truncates the logical plan per step, the
+    // dedupClusters discipline for exactly this iterative shape.
+    val x0 = firstPt.select(keys :+ col("fx").as("x") :+ col("fy").as("y"): _*)
+    val picks = Fixpoint.rounds(nb, x0) { (xs, t) =>
+      val prev = xs(t - 1).select(keys :+ col("x").as("px") :+ col("y").as("py"): _*)
       // no broadcast hint on prev — it is series-scaled (AQE
       // broadcasts it while it fits, shuffle-joins beyond)
-      val pick = midA.filter(col("b") === b)
+      midA.filter(col("b") === t - 1)
         .join(prev, kNames)
         .withColumn("e", abs(
           (col("px") * col("cc") - col("cxs")) * (col("y") - col("py")) -
           (col("px") - col("x")) * (col("cys") - col("py") * col("cc"))))
         .withColumn("pk", row_number().over(wPick)).filter(col("pk") === 1)
         .select(keys :+ col("x") :+ col("y"): _*)
-        // each step feeds the next join AND the result union — and the
-        // chain's nested lineage makes Catalyst re-optimize an
-        // ever-deeper tree (measured: planning, not execution,
-        // dominated the chain). localCheckpoint truncates the logical
-        // plan per step — the dedupClusters discipline for exactly
-        // this iterative shape.
-        .localCheckpoint()
-      picks = Some(picks.fold(pick)(_.unionByName(pick)))
-      prev = pick.select(keys :+ col("x").as("px") :+ col("y").as("py"): _*)
     }
-    short
-      .unionByName(firstPt.select(keys :+ col("fx").as("x") :+ col("fy").as("y"): _*))
-      .unionByName(picks.get)
-      .unionByName(lastPt.select(keys :+ col("lx").as("x") :+ col("ly").as("y"): _*))
+    (short +: picks :+
+      lastPt.select(keys :+ col("lx").as("x") :+ col("ly").as("y"): _*))
+      .reduce(_.unionByName(_))
   }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * near-dup cluster canonicalization. All shuffle-bounded: splitting
   * is a pure projection, decontamination is an inverted-index
   * equi-join, clustering is iterative min-label propagation over the
-  * (sparse) near-dup pair graph.
+  * (sparse) near-dup pair graph. Multi-consumer relations are pinned
+  * through [[Pins.pin]] (cache lifetime: its scaladoc).
   */
 object PipelineOps {
 
@@ -198,7 +199,7 @@ object PipelineOps {
       .select(col("doc_id"), col("is_eval"),
         explode(TextOps.shingles(col("graft_toks"), n)).as("s"))
       .select(col("doc_id"), col("is_eval"), xxhash64(col("s")).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.pin)
     val kept = sh.groupBy("tok").agg(
         count(when(col("is_eval"), lit(1))).as("n_eval"),
         count(when(!col("is_eval"), lit(1))).as("n_train"))

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorFunctions
+
+import Pins.{pin, scoped}
 
 /** SURVEY §2.E — approximate nearest-neighbor search over an embedding
   * column. Two scale paths around the exact brute-force baseline
@@ -20,6 +21,8 @@ import graft.functions.VectorFunctions
   * Both turn O(|queries|·|corpus|) scoring into bucketed equi-joins;
   * exact cosine runs only on the candidate set, and top-k is a
   * per-query window over candidates (bounded by bucket sizes).
+  * Multi-consumer relations are pinned through [[Pins.pin]] (cache
+  * lifetime: its scaladoc).
   */
 object Similarity {
 
@@ -262,8 +265,7 @@ object Similarity {
         // four times. The cached payload is (id, tables bucket keys)
         // ≈ tables·8 B per row — sketch-sized, not the vector table;
         // the explode downstream recomputes from cache for pennies.
-        val hashed = v.select(col("id"), bucketKeys(col("v"), planes).as("bks"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val hashed = pin(v.select(col("id"), bucketKeys(col("v"), planes).as("bks")))
         val keyed = hashed.select(col("id"), explode(col("bks")).as("bk"))
         // the bucket join and multi-table distinct move ONLY id pairs;
         // vectors re-attach by id equi-joins afterwards — the distinct's
@@ -306,12 +308,10 @@ object Similarity {
     // whole corpus, and pinning the full vector table into executor
     // storage is a new cost the caller never asked for (review
     // finding) — the pre-sampling behavior (re-scan per pass) stands
-    val doCache = fitSamplePct < 100
-    val sampled =
-      if (!doCache) full
-      else full.filter(PipelineOps.hashKeep(col("id"), lit(fitSamplePct)))
-    val v = if (doCache) sampled.cache() else sampled
-    try {
+    scoped {
+      val v =
+        if (fitSamplePct >= 100) full
+        else pin(full.filter(PipelineOps.hashKeep(col("id"), lit(fitSamplePct))))
       var init: Array[Array[Double]] = v.orderBy("id").limit(k)
         .select("v").collect().map(_.getSeq[Double](0).toArray)
       // degenerate sample (fewer rows than centroids): fit on everything
@@ -332,7 +332,7 @@ object Similarity {
         centroids = centroids.indices.map(i => means.getOrElse(i.toLong, centroids(i))).toArray
       }
       centroids
-    } finally if (doCache) v.unpersist(blocking = false)
+    }
   }
 
   /** E13 (r14): EXACT power iteration for the corpus's top principal
@@ -430,17 +430,15 @@ object Similarity {
     require(k >= 1 && rounds >= 1, "kmeansExact: k and rounds must be >= 1")
     val quant = transform(VectorFunctions.asDouble(col(vecCol)),
       x => floor(x * scale).cast("int"))
-    // cached fit input: id + dim ints per row — sketch-sized (the
-    // caller-owned persist contract, docs/SCALE.md §caching); read by
-    // `rounds` assignment passes + `rounds-1` update aggregations
-    val base = vecs.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("vec_id"), quant.as("q"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // try/finally: the fit input is model-fit-scoped, not
-    // caller-owned — the result below is localCheckpoint'ed (eager,
+    // the fit input is model-fit-scoped: pinned inside its own scope
+    // (id + dim ints per row — sketch-sized), read by `rounds`
+    // assignment passes + `rounds-1` update aggregations, and released
+    // on return — the result below is localCheckpoint'ed (eager,
     // lineage truncated) so the returned frame no longer references
     // the cache and repeated invocations leak nothing (ADVICE r13)
-    try {
+    scoped {
+      val base = pin(vecs.filter(col(vecCol).isNotNull)
+        .select(col(idCol).cast("long").as("vec_id"), quant.as("q")))
       // deterministic init: the k lowest-id vectors, cid = id rank
       // (bounded collect: k rows of model state)
       var cents: Array[Array[Long]] = base.orderBy("vec_id").limit(k)
@@ -483,7 +481,7 @@ object Similarity {
         }
       }
       assigned.select("vec_id", "cid").localCheckpoint()
-    } finally base.unpersist(blocking = false)
+    }
   }
 
   /** E12 (r13): cluster-balanced corpus selection — `perCluster`

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import Pins.pin
 
 /** SURVEY §2.D3/D4 — hash-sketch dedup: MinHash + banded LSH and
   * 64-bit SimHash with hamming-band candidate generation.
@@ -17,7 +18,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Not SQL-expressible in DuckDB (xxhash64 signatures) → rows-only
   * driver checks; recall-vs-ground-truth invariants live in
-  * SketchSpec.
+  * SketchSpec. Multi-consumer sketch tables are pinned through
+  * [[Pins.pin]] (cache lifetime: its scaladoc).
   */
 object Sketches {
 
@@ -68,33 +70,39 @@ object Sketches {
     // corpus scan + shingle explode + k-way min-agg runs four times,
     // the dominant cost at corpus scale. The sketch is |docs|×(k+1)
     // longs (~0.1% of the corpus — model-sized, NOT the corpus pin the
-    // fitCentroids review finding rejects), so persist it; the entry
-    // is plan-keyed in the CacheManager, so repeated builds over the
+    // fitCentroids review finding rejects), so pin it; the entry is
+    // plan-keyed in the CacheManager, so repeated builds over the
     // same input share one copy.
-    val sigs = minhashSignatures(docs, idCol, textCol, n, k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // band key = hash of the band's r signature components
-    val banded = sigs.select(
+    val sigs = pin(minhashSignatures(docs, idCol, textCol, n, k))
+    // two-pass bucket cap (Skew.capHotKeys), then posting list per
+    // surviving band key -> in-bucket pairs, deduped across bands
+    // (collect_list buffers are bounded by maxBucket by construction)
+    val cand = postingPairs(
+      Skew.capHotKeys(minhashBandKeys(sigs, bands, r), maxBucket, Seq("bk")),
+      "bk").distinct()
+    verifySignatures(cand, sigs, sigs, k, minSigSim)
+  }
+
+  /** One row (doc_id, bk) per MinHash band of each signature: the band
+    * key is the hash of the band's `r` signature components. */
+  private def minhashBandKeys(sigs: DataFrame, bands: Int, r: Int): DataFrame =
+    sigs.select(
       col("doc_id"),
       array((0 until bands).map(b =>
         xxhash64(lit(b) +: (0 until r).map(i => col(s"h${b * r + i}")): _*)): _*)
         .as("bks"))
       .select(col("doc_id"), explode(col("bks")).as("bk"))
-    // two-pass bucket cap (Skew.capHotKeys), then posting list per
-    // surviving band key -> in-bucket pairs, deduped across bands
-    // (collect_list buffers are bounded by maxBucket by construction)
-    val cand = Skew.capHotKeys(banded, maxBucket, Seq("bk"))
-      .groupBy("bk")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select(explode(col("ds")).as("i"), col("ds"))
-      .select(col("i"), explode(col("ds")).as("j"))
-      .where(col("i") < col("j"))
-      .distinct()
-    // verify candidates on full signatures: estimated Jaccard =
-    // fraction of equal components (equi-join on doc id, no fan-out)
-    val si = sigs.toDF(sigs.columns.toIndexedSeq
+
+  /** Verify candidate pairs (i, j) on full signatures — `sigsI` holds
+    * doc i's, `sigsJ` doc j's: estimated Jaccard = fraction of equal
+    * components (equi-join on doc id, no fan-out), kept at
+    * `minSigSim`. Output: (i, j, sig_sim). */
+  private def verifySignatures(cand: DataFrame, sigsI: DataFrame,
+                               sigsJ: DataFrame, k: Int,
+                               minSigSim: Double): DataFrame = {
+    val si = sigsI.toDF(sigsI.columns.toIndexedSeq
       .map(c => if (c == "doc_id") "i" else s"${c}_i"): _*)
-    val sj = sigs.toDF(sigs.columns.toIndexedSeq
+    val sj = sigsJ.toDF(sigsJ.columns.toIndexedSeq
       .map(c => if (c == "doc_id") "j" else s"${c}_j"): _*)
     val agree = (0 until k).map(s =>
       when(col(s"h${s}_i") === col(s"h${s}_j"), 1).otherwise(0))
@@ -104,6 +112,18 @@ object Sketches {
       .filter(col("sig_sim") >= minSigSim)
       .select(col("i"), col("j"), round(col("sig_sim"), 4).as("sig_sim"))
   }
+
+  /** In-bucket doc pairs (i < j) from the posting list of each `keys`
+    * bucket of a (doc_id, keys…) stream: two native explodes + a
+    * filter over each sorted list (codegen'd GenerateExec, no
+    * interpreted combination builder). A pair sharing several buckets
+    * appears once per bucket; callers dedup or count. */
+  private[graft] def postingPairs(stream: DataFrame, keys: String*): DataFrame =
+    stream.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+      .select(explode(col("ds")).as("i"), col("ds"))
+      .select(col("i"), explode(col("ds")).as("j"))
+      .where(col("i") < col("j"))
 
   /** D7: INCREMENTAL near-dup detection — which docs of a NEW batch
     * near-duplicate something in the HISTORICAL corpus. The daily-
@@ -132,37 +152,19 @@ object Sketches {
                         corpusSigs: Option[DataFrame] = None): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
     val r = k / bands
-    def bandKeys(sigs: DataFrame) = sigs.select(
-      col("doc_id"),
-      array((0 until bands).map(b =>
-        xxhash64(lit(b) +: (0 until r).map(i => col(s"h${b * r + i}")): _*)): _*)
-        .as("bks"))
-      .select(col("doc_id"), explode(col("bks")).as("bk"))
-    val newSigs = minhashSignatures(newDocs, idCol, textCol, n, k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val histSigs = corpusSigs
-      .getOrElse(minhashSignatures(corpus, idCol, textCol, n, k))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val newSigs = pin(minhashSignatures(newDocs, idCol, textCol, n, k))
+    val histSigs = pin(corpusSigs
+      .getOrElse(minhashSignatures(corpus, idCol, textCol, n, k)))
     // cap the CORPUS side (the quadratic-fan-out risk: one hot
     // history bucket × every colliding new doc); the new batch joins
     // it directly — ids only through the shuffle, sigs re-attach after
-    val hist = Skew.capHotKeys(bandKeys(histSigs), maxBucket, Seq("bk"))
+    val hist = Skew.capHotKeys(minhashBandKeys(histSigs, bands, r), maxBucket, Seq("bk"))
       .withColumnRenamed("doc_id", "j")
-    val cand = bandKeys(newSigs).withColumnRenamed("doc_id", "i")
+    val cand = minhashBandKeys(newSigs, bands, r).withColumnRenamed("doc_id", "i")
       .join(hist, "bk")
       .where(col("i") =!= col("j")) // overlapping id spaces
       .select("i", "j").distinct()
-    val si = newSigs.toDF(newSigs.columns.toIndexedSeq
-      .map(c => if (c == "doc_id") "i" else s"${c}_i"): _*)
-    val sj = histSigs.toDF(histSigs.columns.toIndexedSeq
-      .map(c => if (c == "doc_id") "j" else s"${c}_j"): _*)
-    val agree = (0 until k).map(s =>
-      when(col(s"h${s}_i") === col(s"h${s}_j"), 1).otherwise(0))
-      .reduce(_ + _).cast("double") / k
-    cand.join(si, "i").join(sj, "j")
-      .withColumn("sig_sim", agree)
-      .filter(col("sig_sim") >= minSigSim)
-      .select(col("i"), col("j"), round(col("sig_sim"), 4).as("sig_sim"))
+    verifySignatures(cand, newSigs, histSigs, k, minSigSim)
   }
 
   /** 64-bit SimHash per document: bit b of the sketch is the sign of
@@ -203,26 +205,36 @@ object Sketches {
                           idCol: String, textCol: String,
                           maxHamming: Int = 3, maxBucket: Long = 10000L,
                           corpusSketches: Option[DataFrame] = None): DataFrame = {
-    def bandKeys(sk: DataFrame) = sk.select(
+    val newSk = pin(simhashSketch(newDocs, idCol, textCol))
+    val histSk = pin(corpusSketches
+      .getOrElse(simhashSketch(corpus, idCol, textCol)))
+    val hist = Skew.capHotKeys(simhashBandKeys(histSk), maxBucket, Seq("band", "bits"))
+      .withColumnRenamed("doc_id", "j")
+    val cand = simhashBandKeys(newSk).withColumnRenamed("doc_id", "i")
+      .join(hist, Seq("band", "bits"))
+      .where(col("i") =!= col("j"))
+      .select("i", "j").distinct()
+    verifyHamming(cand, newSk, histSk, maxHamming)
+  }
+
+  /** One row (doc_id, band, bits) per 16-bit band of each 64-bit
+    * SimHash sketch (4 bands). */
+  private def simhashBandKeys(sk: DataFrame): DataFrame =
+    sk.select(
       col("doc_id"),
       explode(array((0 until 4).map(b => struct(
         lit(b).as("band"),
         shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFFL).as("bits"))): _*))
         .as("bk"))
       .select(col("doc_id"), col("bk.band"), col("bk.bits"))
-    val newSk = simhashSketch(newDocs, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val histSk = corpusSketches
-      .getOrElse(simhashSketch(corpus, idCol, textCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hist = Skew.capHotKeys(bandKeys(histSk), maxBucket, Seq("band", "bits"))
-      .withColumnRenamed("doc_id", "j")
-    val cand = bandKeys(newSk).withColumnRenamed("doc_id", "i")
-      .join(hist, Seq("band", "bits"))
-      .where(col("i") =!= col("j"))
-      .select("i", "j").distinct()
-    val si = newSk.select(col("doc_id").as("i"), col("simhash").as("sh_i"))
-    val sj = histSk.select(col("doc_id").as("j"), col("simhash").as("sh_j"))
+
+  /** Verify candidate pairs (i, j) with an exact popcount of the
+    * sketches' XOR — `skI` holds doc i's sketch, `skJ` doc j's — kept
+    * at `maxHamming`. Output: (i, j, hamming). */
+  private def verifyHamming(cand: DataFrame, skI: DataFrame, skJ: DataFrame,
+                            maxHamming: Int): DataFrame = {
+    val si = skI.select(col("doc_id").as("i"), col("simhash").as("sh_i"))
+    val sj = skJ.select(col("doc_id").as("j"), col("simhash").as("sh_j"))
     cand.join(si, "i").join(sj, "j")
       .withColumn("hamming", bit_count(col("sh_i").bitwiseXOR(col("sh_j"))))
       .filter(col("hamming") <= maxHamming)
@@ -387,30 +399,13 @@ object Sketches {
     // same four-consumer persist rationale as [[minhashLsh]]: the
     // 64-sum-agg sketch is (doc_id, long) per row — recomputing the
     // token explode per consumer is the scale cost, not the cache
-    val sk = simhashSketch(docs, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val banded = sk.select(
-      col("doc_id"),
-      explode(array((0 until 4).map(b => struct(
-        lit(b).as("band"),
-        shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFFL).as("bits"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.bits"))
+    val sk = pin(simhashSketch(docs, idCol, textCol))
     // two-pass bucket cap (Skew.capHotKeys — bounded collect_list
     // buffers; same rationale as minhashLsh / the Jaccard df cap)
-    val cand = Skew.capHotKeys(banded, maxBucket, Seq("band", "bits"))
-      .groupBy("band", "bits")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select(explode(col("ds")).as("i"), col("ds"))
-      .select(col("i"), explode(col("ds")).as("j"))
-      .where(col("i") < col("j"))
-      .distinct()
-    val si = sk.select(col("doc_id").as("i"), col("simhash").as("sh_i"))
-    val sj = sk.select(col("doc_id").as("j"), col("simhash").as("sh_j"))
-    cand.join(si, "i").join(sj, "j")
-      .withColumn("hamming", bit_count(col("sh_i").bitwiseXOR(col("sh_j"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("i"), col("j"), col("hamming").cast("long").as("hamming"))
+    val cand = postingPairs(
+      Skew.capHotKeys(simhashBandKeys(sk), maxBucket, Seq("band", "bits")),
+      "band", "bits").distinct()
+    verifyHamming(cand, sk, sk, maxHamming)
   }
 
   // -------------------------------------------------------------------

@@ -678,7 +678,7 @@ object SketchQueries extends QueryPack {
           sum(when(col("fragmented"), 1).otherwise(0)).as("post_frag"))
         .select(col("n_indexed"),
           (lit(pre.getAs[Long]("pre_rows")) === col("n_indexed") &&
-            lit(pre.getAs[Long]("pre_frag")) === lit(compacted.size.toLong) &&
+            lit(pre.getAs[Long]("pre_frag") == compacted.size.toLong) &&
             col("post_frag") === 0).as("layout_ok"))
     }),
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, RelationalGroupedDataset, Row, 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.operators.Pins
 
 /** SURVEY §2.H — Structured Streaming ingest, the Spark-native form of
   * the reference's Kafka-engine tables + consumer groups
@@ -376,13 +377,14 @@ object CdcStream {
         case None => fresh
       }
       // two consumers (save + fingerprint merge); without the pin
-      // the screen/verify plan runs twice
-      val pinned = survivors.persist()
-      try {
+      // the screen/verify plan runs twice. The batch's scope releases
+      // it ([[graft.operators.Pins]]).
+      Pins.scoped {
+        val pinned = Pins.pin(survivors)
         save(pinned)
         graft.operators.Sketches
           .mergeExactBloom(pinned, textCol, bloomPath, capacityItems, fpp)
-      } finally pinned.unpersist()
+      }
     }
 
   /** Streaming uniqState materialized view — the reference's

@@ -1,15 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftprobe.CacheIntrospect
 import org.apache.spark.storage.StorageLevel
-import graft.operators.GraphOps
+import graft.operators.{Dedup, GraphOps, Lttb, Pins, PipelineOps, Sketches}
 
-/** The cache-lifetime contract (r10, VERDICT r9 #7): GraphOps pins
-  * loop-invariant relations for the duration of an iterative build;
+/** The cache-lifetime contract (r10, VERDICT r9 #7): operators pin
+  * loop-invariant and multi-consumer relations through `Pins.pin`;
   * `materialized` must hand back an executed, lineage-truncated
-  * result and release EVERY pin its build made (and no other), so a
-  * one-shot driver pass ends with zero residual cached relations.
+  * result and release EVERY pin its build made, whichever operator
+  * made it (and no other), so a one-shot driver pass ends with zero
+  * residual cached relations.
   * Asserted against the actual cache manager (via the test-only
   * visibility shim), not a proxy.
   */
@@ -76,6 +78,54 @@ class CacheLifetimeSpec extends SparkSpec {
     assert(pinned, "a scoped release must not drop pins made outside its scope")
     assert(outside.collect().length == 4)
     spark.catalog.clearCache()
+    assert(CacheIntrospect.cacheManagerEmpty(spark))
+  }
+
+  private def docs = Tables.load(spark, sfDir, "documents")
+
+  test("materialized releases the pins of every operator, not only GraphOps'") {
+    spark.catalog.clearCache()
+    val series = spark.range(200).select((col("id") % 2).as("k"),
+      col("id").as("x"), (col("id") * 7919 % 101).as("y"))
+    val builds: Seq[(String, () => DataFrame)] = Seq(
+      "Sketches.minhashLsh" -> (() => Sketches.minhashLsh(docs, "doc_id", "text")),
+      "Sketches.simhashPairs" -> (() => Sketches.simhashPairs(docs, "doc_id", "text")),
+      "Dedup.jaccardPairs" -> (() =>
+        Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5, dfCap = 1000L)),
+      "PipelineOps.decontaminate" -> (() =>
+        PipelineOps.decontaminate(docs, "doc_id", "text", col("doc_id") % 5 === 0)),
+      "Lttb.exact" -> (() => Lttb.exact(series, Seq("k"), "x", "y", nOut = 6)))
+    builds.foreach { case (name, build) =>
+      GraphOps.materialized(build())(_.collect())
+      assert(CacheIntrospect.cacheManagerEmpty(spark),
+        s"$name pins must be released by materialized()")
+    }
+  }
+
+  test("a plan the caller cached before a scope stays cached when an operator inside re-pins it") {
+    spark.catalog.clearCache()
+    val sigs = Sketches.minhashSignatures(docs, "doc_id", "text", n = 3, k = 16)
+      .persist()
+    sigs.count()
+    // minhashLsh pins exactly this plan; the caller cached it first
+    GraphOps.materialized(Sketches.minhashLsh(docs, "doc_id", "text"))(_.collect())
+    assert(sigs.storageLevel == StorageLevel.MEMORY_AND_DISK,
+      "a scope must not release a plan another owner cached first")
+    sigs.unpersist(true)
+    assert(CacheIntrospect.cacheManagerEmpty(spark))
+  }
+
+  test("a nested scope releases its own pins and leaves the outer scope's") {
+    spark.catalog.clearCache()
+    val outer = spark.range(10).toDF("x")
+    val inner = spark.range(20).toDF("x")
+    def cached(df: DataFrame) = df.storageLevel != StorageLevel.NONE
+    Pins.scoped {
+      Pins.pin(outer).count()
+      Pins.scoped(Pins.pin(inner).count())
+      assert(!cached(inner), "the inner scope owns its pin")
+      assert(cached(outer), "the inner scope must not release the outer pin")
+    }
     assert(CacheIntrospect.cacheManagerEmpty(spark))
   }
 }
